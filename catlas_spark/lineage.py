@@ -63,10 +63,10 @@ def attach_counter(df: DataFrame, stage: str, lineage: Lineage | list) -> DataFr
     """Attach an Observation counting rows (and live rows when a
     ``filter_reason`` column exists) at this point of the plan."""
     obs = Observation(f"stage_{stage}_{len(getattr(lineage, 'stages', lineage))}")
-    metrics = [F.count(F.lit(1)).alias("rows")]
+    metrics = [F.expr("count(1) AS rows")]
     if "filter_reason" in df.columns:
         metrics.append(
-            F.sum(F.when(F.col("filter_reason").isNull(), 1).otherwise(0)).alias("live_rows")
+            F.expr("sum(CASE WHEN filter_reason IS NULL THEN 1 ELSE 0 END) AS live_rows")
         )
     out = df.observe(obs, *metrics)
     sc = StageCount(stage, obs)

@@ -19,6 +19,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sqltext import ident, lit, lit_list
 from .relational import (
     best_within_relative_threshold,
     group_exists_mark,
@@ -69,24 +70,25 @@ ELEMENT_GROUP_ALIASES: dict[str, str] = {
 }
 
 
-def _lit_array(values: list[str]):
-    return F.array(*[F.lit(v) for v in values])
+def _in(col: str, values) -> str:
+    """``col IN (values)`` as SQL text; an empty list matches nothing."""
+    return f"{col} IN ({lit_list(values)})" if values else "false"
 
 
-def _subset_of(col: str, allowed: list[str]):
+def _subset_of(col: str, allowed: list[str]) -> str:
     """array ⊆ allowed (F3 pattern)."""
-    return F.size(F.array_except(F.col(col), _lit_array(allowed))) == 0
+    return f"size(array_except({col}, array({lit_list(allowed)}))) = 0"
 
 
 # --- bulk filters (reference F1-F12, catlas/filters.py:42-132) -------------
 
 
 def _by_bulk_ids(df, v, _):
-    return df.filter(F.col("bulk_id").isin(list(v)))
+    return df.filter(_in("bulk_id", list(v)))
 
 
 def _ignore_bulk_ids(df, v, _):
-    return df.filter(~F.col("bulk_id").isin(list(v)))
+    return df.filter(f"NOT ({_in('bulk_id', list(v))})")
 
 
 def _acceptable_elements(df, v, _):
@@ -94,7 +96,7 @@ def _acceptable_elements(df, v, _):
 
 
 def _num_elements(df, v, _):
-    return df.filter(F.col("bulk_nelements").isin(list(v)))
+    return df.filter(_in("bulk_nelements", list(v)))
 
 
 def _required_elements(df, v, _):
@@ -103,12 +105,12 @@ def _required_elements(df, v, _):
     # list made the size test unsatisfiable and the screen silently
     # returned empty (r8 review); every required element present <=>
     # req \ bulk_elements is empty, duplicates and all
-    req = _lit_array(list(v))
-    return df.filter(F.size(F.array_except(req, F.col("bulk_elements"))) == 0)
+    req = f"array({lit_list(list(v))})"
+    return df.filter(f"size(array_except({req}, bulk_elements)) = 0")
 
 
 def _bulk_object_size(df, v, _):
-    return df.filter(F.col("bulk_natoms") <= int(v))
+    return df.filter(f"bulk_natoms <= {lit(int(v))}")
 
 
 def _elements_active_host(df, v, _):
@@ -116,9 +118,9 @@ def _elements_active_host(df, v, _):
     (catlas/filters.py:73-87)."""
     active, host = list(v["active"]), list(v["host"])
     return df.filter(
-        _subset_of("bulk_elements", active + host)
-        & F.arrays_overlap(F.col("bulk_elements"), _lit_array(active))
-        & F.arrays_overlap(F.col("bulk_elements"), _lit_array(host))
+        f"{_subset_of('bulk_elements', active + host)}"
+        f" AND arrays_overlap(bulk_elements, array({lit_list(active)}))"
+        f" AND arrays_overlap(bulk_elements, array({lit_list(host)}))"
     )
 
 
@@ -179,7 +181,7 @@ def _pourbaix_stability(df, v, ctx):
 
 
 def _e_above_hull(df, v, _):
-    return df.filter(F.col("bulk_e_above_hull") <= float(v))
+    return df.filter(f"bulk_e_above_hull <= {lit(float(v))}")
 
 
 def _band_gap(df, v, _):
@@ -194,9 +196,9 @@ def _band_gap(df, v, _):
         return df
     out = df
     if lo is not None:
-        out = out.filter(F.col("bulk_band_gap") >= float(lo))
+        out = out.filter(f"bulk_band_gap >= {lit(float(lo))}")
     if hi is not None:
-        out = out.filter(F.col("bulk_band_gap") <= float(hi))
+        out = out.filter(f"bulk_band_gap <= {lit(float(hi))}")
     return out
 
 
@@ -224,7 +226,7 @@ BULK_FILTERS: dict[str, FilterFn] = {
 
 
 def _by_smiles(df, v, _):
-    return df.filter(F.col("adsorbate_smiles").isin(list(v)))
+    return df.filter(_in("adsorbate_smiles", list(v)))
 
 
 ADSORBATE_FILTERS: dict[str, FilterFn] = {
@@ -236,14 +238,14 @@ ADSORBATE_FILTERS: dict[str, FilterFn] = {
 
 
 def _slab_object_size(df, v, _):
-    return df.filter(F.col("slab_natoms") <= int(v))
+    return df.filter(f"slab_natoms <= {lit(int(v))}")
 
 
 def _max_miller(df, v, _):
     """F15 is pushed into the enumeration source (parameter of the TVF,
     catlas/prediction_steps.py:227-231); as a post-filter it is the
     equivalent predicate."""
-    return df.filter(F.col("slab_max_miller_index") <= int(v))
+    return df.filter(f"slab_max_miller_index <= {lit(int(v))}")
 
 
 def _surface_topk(score_col: str):
@@ -299,10 +301,10 @@ def adsorption_energy_filter(
     have min_<label> in [min, max]; otherwise soft-delete the whole group
     (`predictions_filter`, catlas/filters.py:266-324)."""
     keys = hash_columns or DEFAULT_HASH_COLUMNS
-    pred = (
-        F.col("adsorbate_smiles").isin(smiles)
-        & F.col(f"min_{step_label}").isNotNull()
-        & F.col(f"min_{step_label}").between(min_value, max_value)
+    energy = ident(f"min_{step_label}")
+    pred = F.expr(
+        f"{_in('adsorbate_smiles', smiles)} AND {energy} IS NOT NULL"
+        f" AND {energy} BETWEEN {lit(min_value)} AND {lit(max_value)}"
     )
     reason = f"No {'/'.join(smiles)} adsorption energy in [{min_value}, {max_value}]"
     return group_exists_mark(df, keys, pred, reason)

@@ -20,9 +20,21 @@ Spark-first choices:
 - Inference is an Arrow-batched mapInPandas with an executor-singleton
   model (P5, reference BOCPP_dict catlas/adslab_predictions.py:22,260-272)
   and micro-batching (P6, :287-292). Rows already soft-deleted skip the
-  model and emit NULL energies (F20, :275-282).
+  model and emit NULL energies (F20, :275-282). The model is reached
+  through the module-level ``_model``: cloudpickle pickles that by
+  reference, so every task in a worker process shares one cache. (A
+  closure that read the cache dict directly would carry a pickled copy
+  of it, one fresh cache and one model load per task.)
 - Per-row energy arrays stay ARRAY columns; grouped min/argmin is
   array_min + array_position (A3, :324-337) — no explode/shuffle.
+
+Build shape: ``run_screen`` is lazy, so its cost is plan construction
+over py4j. Each stage adds its columns in one SQL-text projection
+(``selectExpr`` / ``withColumns`` of ``F.expr``, see ``sqltext``), never
+one ``withColumn`` per column, and higher-order functions are written as
+SQL lambdas, never Python lambdas (each of those creates its lambda
+variables over py4j). tests/test_screen_plan.py holds the build to a
+py4j command budget and the result to a recorded fingerprint.
 """
 
 from __future__ import annotations
@@ -33,10 +45,11 @@ from typing import Any
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import sqltext
 from .lineage import Lineage, attach_counter
 from .operators.filters import (
     ADSORBATE_FILTERS,
@@ -70,11 +83,6 @@ def miller_indices(max_miller: int) -> list[tuple[int, int, int]]:
     return out
 
 
-def _hash_unit(*cols) -> F.Column:
-    """Deterministic double in [0, 1) from a 64-bit column hash."""
-    return F.pmod(F.xxhash64(*cols), F.lit(1_000_000)) / 1_000_000.0
-
-
 def enumerate_slabs(bulks: DataFrame, max_miller: int = 2) -> DataFrame:
     """bulk row → N surface rows. Parent bulk columns are carried on every
     slab row for free (explode keeps them — the reference deep-copies
@@ -82,44 +90,43 @@ def enumerate_slabs(bulks: DataFrame, max_miller: int = 2) -> DataFrame:
 
     max_miller is a parameter of the enumeration, not a post-filter
     (R1: the one pushdown Catalyst cannot do into a generator).
+
+    Four SQL-text projections: one per generator (Spark allows one per
+    SELECT), then the derived per-surface columns.
     """
-    millers = miller_indices(max_miller)
-    miller_arr = F.array(
-        *[
-            F.struct(F.lit(h).alias("h"), F.lit(k).alias("k"), F.lit(l).alias("l"))
-            for (h, k, l) in millers
-        ]
+    millers = ", ".join(
+        f"struct(array({h}, {k}, {l}) AS slab_millers, {h} AS slab_max_miller_index)"
+        for (h, k, l) in miller_indices(max_miller)
     )
-    n_term = 1 + F.pmod(F.col("bulk_natoms"), F.lit(3))
-    with_m = (
-        bulks.withColumn("m", F.explode(miller_arr))
-        .withColumn("slab_millers", F.array("m.h", "m.k", "m.l"))
-        .withColumn("slab_max_miller_index", F.col("m.h"))
-        .drop("m")
-    )
-    # terminations: shift grid (i+1)/(n_term+1), 2-decimal (FIXTURES.md §3)
-    shifts = F.transform(
-        F.sequence(F.lit(1), n_term),
-        lambda i: F.round(i.cast("double") / (n_term + 1), 2),
-    )
-    with_shift = with_m.withColumn("slab_shift", F.explode(shifts))
-    # non-z-invertible surfaces also emit the flipped bottom
-    # (enumeration_utils.py:71-125)
-    invertible = (
-        F.pmod(F.xxhash64("bulk_id", "slab_millers", "slab_shift"), F.lit(2)) == 0
-    )
-    tops = F.when(invertible, F.array(F.lit(True))).otherwise(
-        F.array(F.lit(True), F.lit(False))
-    )
-    slabs = with_shift.withColumn("slab_top", F.explode(tops))
-    key = ["bulk_id", "slab_millers", "slab_shift", "slab_top"]
+    n_term = "(1 + pmod(bulk_natoms, 3))"
+    key = "bulk_id, slab_millers, slab_shift, slab_top"
+
+    def score(tag: str) -> str:
+        """round(10 * a deterministic double in [0, 1), 6)"""
+        return f"round(pmod(xxhash64({key}, '{tag}'), 1000000) / 1000000.0D * 10.0D, 6)"
+
     return (
-        slabs.withColumn(
-            "slab_natoms", (10 + F.pmod(F.xxhash64(*key), F.lit(191))).cast("int")
+        bulks.selectExpr("*", f"inline(array({millers}))")
+        # terminations: shift grid (i+1)/(n_term+1), 2-decimal (FIXTURES.md §3)
+        .selectExpr(
+            "*",
+            f"explode(transform(sequence(1, {n_term}), "
+            f"i -> round(CAST(i AS DOUBLE) / ({n_term} + 1), 2))) AS slab_shift",
         )
-        .withColumn("slab_score_bb", F.round(_hash_unit(*key, F.lit("bb")) * 10.0, 6))
-        .withColumn("slab_score_sd", F.round(_hash_unit(*key, F.lit("sd")) * 10.0, 6))
-        .withColumn("slab_structure", F.col("bulk_structure"))
+        # non-z-invertible surfaces also emit the flipped bottom
+        # (enumeration_utils.py:71-125)
+        .selectExpr(
+            "*",
+            "explode(CASE WHEN pmod(xxhash64(bulk_id, slab_millers, slab_shift), 2) = 0 "
+            "THEN array(true) ELSE array(true, false) END) AS slab_top",
+        )
+        .selectExpr(
+            "*",
+            f"CAST(10 + pmod(xxhash64({key}), 191) AS INT) AS slab_natoms",
+            f"{score('bb')} AS slab_score_bb",
+            f"{score('sd')} AS slab_score_sd",
+            "bulk_structure AS slab_structure",
+        )
     )
 
 
@@ -136,8 +143,7 @@ def enumerate_adslabs(surfaces: DataFrame, adsorbates: DataFrame) -> DataFrame:
     (reference keeps list[Atoms] per row for the same reason, T2 note).
     """
     combo = surfaces.crossJoin(F.broadcast(adsorbates))
-    n_configs = 1 + F.pmod(F.col("slab_natoms"), F.lit(8))
-    return combo.withColumn("config_ids", F.sequence(F.lit(0), n_configs - 1))
+    return combo.selectExpr("*", "sequence(0, 1 + pmod(slab_natoms, 8) - 1) AS config_ids")
 
 
 # ---------------------------------------------------------------------------
@@ -145,9 +151,9 @@ def enumerate_adslabs(surfaces: DataFrame, adsorbates: DataFrame) -> DataFrame:
 # catlas/adslab_predictions.py:217-362)
 # ---------------------------------------------------------------------------
 
-# executor-singleton model cache (P5): one entry per (checkpoint, batch)
-# per Python worker process — survives across Arrow batches.
-_MODEL_CACHE: dict[tuple, "_SurrogateModel"] = {}
+# executor-singleton model cache (P5): one entry per checkpoint per
+# Python worker process — survives across Arrow batches and tasks.
+_MODEL_CACHE: dict[str, "_SurrogateModel"] = {}
 
 
 class _SurrogateModel:
@@ -175,6 +181,41 @@ class _SurrogateModel:
         return np.split(energies, np.cumsum(counts)[:-1])
 
 
+def _model(checkpoint: str) -> _SurrogateModel:
+    """The worker's model for ``checkpoint``, loaded once per Python worker
+    process (P5). It is a module-level function, so the pickled scorer
+    reaches this module's cache by reference. A closure reading
+    ``_MODEL_CACHE`` itself is pickled with a copy of the dict, and every
+    task would then load its own model."""
+    model = _MODEL_CACHE.get(checkpoint)
+    if model is None:
+        model = _MODEL_CACHE[checkpoint] = _SurrogateModel(checkpoint)
+    return model
+
+
+def _scorer(step_label: str, checkpoint: str, batch_size: int):
+    """The mapInPandas function of one inference step: NULL energies for
+    soft-deleted rows (F20), ``batch_size`` micro-batches (P6)."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model = _model(checkpoint)
+        for pdf in batches:
+            energies: list = [None] * len(pdf)
+            live = pdf.index[pdf["filter_reason"].isna()]
+            for start in range(0, len(live), batch_size):  # micro-batching (P6)
+                idx = live[start : start + batch_size]
+                seeds = pdf.loc[idx, "__seed"].to_numpy(dtype=np.int64).view(np.uint64)
+                counts = pdf.loc[idx, "config_ids"].apply(len).to_numpy(dtype=np.int64)
+                preds = model.predict(seeds, counts)
+                for i, p in zip(idx, preds):
+                    energies[i] = np.round(p, 6)
+            out = pdf.copy()
+            out[step_label] = energies
+            yield out
+
+    return run
+
+
 def energy_prediction(
     df: DataFrame,
     step_label: str,
@@ -192,49 +233,38 @@ def energy_prediction(
     - min/argmin are native array_min/array_position afterwards (A3) —
       no second Python stage, no shuffle.
     """
-    seed_cols = ["bulk_id", "slab_millers", "slab_shift", "slab_top", "adsorbate_smiles"]
-    with_seed = df.withColumn(
-        "__seed", F.xxhash64(*seed_cols, F.lit(step_label))
-    )
-    if "filter_reason" not in with_seed.columns:
-        with_seed = with_seed.withColumn("filter_reason", F.lit(None).cast("string"))
+    added = {
+        "__seed": F.expr(
+            "xxhash64(bulk_id, slab_millers, slab_shift, slab_top, adsorbate_smiles, "
+            f"{sqltext.lit(step_label)})"
+        )
+    }
+    if "filter_reason" not in df.columns:
+        added["filter_reason"] = F.expr("CAST(NULL AS STRING)")
+    with_seed = df.withColumns(added)
 
     out_schema = T.StructType(
         list(with_seed.schema.fields)
         + [T.StructField(step_label, T.ArrayType(T.DoubleType()), True)]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _MODEL_CACHE.setdefault(
-            (checkpoint, batch_size), _SurrogateModel(checkpoint)
-        )
-        for pdf in batches:
-            energies: list = [None] * len(pdf)
-            live = pdf.index[pdf["filter_reason"].isna()]
-            for start in range(0, len(live), batch_size):  # micro-batching (P6)
-                idx = live[start : start + batch_size]
-                seeds = pdf.loc[idx, "__seed"].to_numpy(dtype=np.int64).view(np.uint64)
-                counts = pdf.loc[idx, "config_ids"].apply(len).to_numpy(dtype=np.int64)
-                preds = model.predict(seeds, counts)
-                for i, p in zip(idx, preds):
-                    energies[i] = np.round(p, 6)
-            out = pdf.copy()
-            out[step_label] = energies
-            yield out
-
     # GPU steps get a ResourceProfile pinning this stage to GPU executors
     # (P1/R8); local mode / CPU clusters fall through to the plain path.
     from .resources import inference_profile, map_with_profile
 
     profile = inference_profile(df.sparkSession) if gpu else None
+    run = _scorer(step_label, checkpoint, batch_size)
     scored = map_with_profile(with_seed, run, out_schema, profile).drop("__seed")
-    min_col = F.array_min(F.col(step_label))
-    return scored.withColumn(f"min_{step_label}", min_col).withColumn(
-        f"argmin_config_{step_label}",
-        F.when(
-            min_col.isNotNull(),
-            F.array_position(F.col(step_label), min_col).cast("int") - 1,
-        ),
+    energies = sqltext.ident(step_label)
+    min_e = f"array_min({energies})"
+    return scored.withColumns(
+        {
+            f"min_{step_label}": F.expr(min_e),
+            f"argmin_config_{step_label}": F.expr(
+                f"CASE WHEN {min_e} IS NOT NULL "
+                f"THEN CAST(array_position({energies}, {min_e}) AS INT) - 1 END"
+            ),
+        }
     )
 
 
@@ -254,9 +284,9 @@ def memoized_energy_prediction(
 
     label = step["label"]
     if "filter_reason" not in df.columns:
-        df = df.withColumn("filter_reason", F.lit(None).cast("string"))
-    live = df.filter(F.col("filter_reason").isNull())
-    dead = df.filter(F.col("filter_reason").isNotNull())
+        df = df.withColumn("filter_reason", F.expr("CAST(NULL AS STRING)"))
+    live = df.filter("filter_reason IS NULL")
+    dead = df.filter("filter_reason IS NOT NULL")
 
     def compute(part: DataFrame) -> DataFrame:
         return energy_prediction(
@@ -280,10 +310,12 @@ def memoized_energy_prediction(
     live_out = memoize(
         spark, live, key_cols, compute, step["memo_table"], version, pin_input=True
     )
-    dead_out = (
-        dead.withColumn(label, F.lit(None).cast("array<double>"))
-        .withColumn(f"min_{label}", F.lit(None).cast("double"))
-        .withColumn(f"argmin_config_{label}", F.lit(None).cast("int"))
+    dead_out = dead.withColumns(
+        {
+            label: F.expr("CAST(NULL AS ARRAY<DOUBLE>)"),
+            f"min_{label}": F.expr("CAST(NULL AS DOUBLE)"),
+            f"argmin_config_{label}": F.expr("CAST(NULL AS INT)"),
+        }
     )
     return live_out.unionByName(dead_out)
 
@@ -358,25 +390,17 @@ def run_screen(
 
                 if "bond_edges" not in adslabs.columns:
                     adslabs = attach_surrogate_graph(adslabs)
-                final_edges = F.filter(
-                    F.col("bond_edges"),
-                    lambda e: F.pmod(
-                        F.xxhash64(
-                            "bulk_id", "adsorbate_smiles", F.lit(step["label"]),
-                            F.element_at(e, 1),
-                        ),
-                        F.lit(4),
-                    )
-                    > 0,
+                final_edges = (
+                    "filter(bond_edges, e -> pmod(xxhash64(bulk_id, adsorbate_smiles, "
+                    f"{sqltext.lit(step['label'])}, element_at(e, 1)), 4) > 0)"
                 )
-                ads_nodes = F.sequence(
-                    F.lit(0), F.pmod(F.xxhash64("adsorbate_smiles"), F.lit(2))
-                ).cast("array<int>")
+                ads_nodes = (
+                    "CAST(sequence(0, pmod(xxhash64(adsorbate_smiles), 2)) AS ARRAY<INT>)"
+                )
                 adslabs = adslabs.withColumn(
                     f"anomaly_detection_{step['label']}",
                     soft_delete_gate(
-                        adslabs,
-                        anomaly_flags(F.col("bond_edges"), final_edges, ads_nodes),
+                        adslabs, anomaly_flags("bond_edges", final_edges, ads_nodes)
                     ),
                 )
         elif kind == "filter_by_adsorption_energy":

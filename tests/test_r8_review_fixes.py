@@ -197,20 +197,24 @@ def test_nuclearity_per_element_subgraph():
     """The reference slices the connectivity matrix to the element's
     atoms BEFORE labeling (catlas/nuclearity.py:77-79): a Cu-Pt-Cu chain
     is two Cu monomers, never a Cu 'dimer' bridged through the Pt atom.
-    Pure driver-side check of the shared python body."""
-    from catlas_spark.operators.structure import _nuclearity_one
+    Pure driver-side check of the batch labeling the Arrow UDF runs."""
+    import pyarrow as pa
+
+    from catlas_spark.operators.structure import nuclearity_batch
 
     # Cu at nodes 1 and 3 — off the surrogate's periodic-boundary nodes
     # (i%4==0 / i%4==2), so the replica adds no Cu-Cu wrap bonds and the
-    # verdict isolates the induced-subgraph semantics
-    out = _nuclearity_one(
-        ["Pt", "Cu", "Pt", "Cu", "Pt"], [[0, 1], [1, 2], [2, 3], [3, 4]]
+    # verdict isolates the induced-subgraph semantics; second row: a
+    # same-element chain is still one cluster of 3
+    out, out2 = (
+        dict(m)
+        for m in nuclearity_batch(
+            pa.array([["Pt", "Cu", "Pt", "Cu", "Pt"], ["Cu", "Cu", "Cu"]]),
+            pa.array([[[0, 1], [1, 2], [2, 3], [3, 4]], [[0, 1], [1, 2]]]),
+        ).to_pylist()
     )
     assert out["Cu"]["nuclearities"] == [1, 1]  # full-graph labeling said [2]
     assert out["Cu"]["nuclearity"] == "1"
-
-    # same-element chain still one cluster of 3
-    out2 = _nuclearity_one(["Cu", "Cu", "Cu"], [[0, 1], [1, 2]])
     assert out2["Cu"]["nuclearities"] == [3]
 
 
