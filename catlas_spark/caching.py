@@ -39,6 +39,10 @@ explains as an InMemoryTableScan). Tooling that needs the REAL lazy plan
 :func:`lazy_plans`, which turns :func:`materialize_and_release` into a
 no-op — the operators then return their full lazy trees (with the
 caches left to the ContextCleaner, fine for explain-only use).
+
+Nothing here sets execution confs: the materializing actions run under
+the caller's physical profile (AQE, shuffle width), which for registry
+queries is decided once per query at its entry (queries.SMALL_INPUT_BYTES).
 """
 
 from __future__ import annotations
@@ -122,51 +126,6 @@ def maybe_persist(
     if not _MATERIALIZE:
         return df
     return df.persist(level)
-
-
-# Small-input execution scope for EAGER operators (r12) — the tiny-exec
-# profile's twin for builders the plan cache rightly excludes. Their
-# internal materializing actions (materialize_and_release counts, probe
-# collects) otherwise run under the session's full shuffle width plus
-# AQE's per-exchange re-planning, pure per-task overhead when the
-# operator's whole INPUT is a few MB. Dispatch is by the caller-supplied
-# input-plan size estimate (never core count), so the same operator over
-# a TB corpus keeps AQE + full width — identical scale contract to
-# queries.TINY_EXEC_*. Interleaved A/B at sf0.1 on minhash_lsh_pairs:
-# 3-4x less process CPU per build, identical 5,992 output rows.
-SMALL_INPUT_EXEC_MAX_BYTES = 64 * 1024 * 1024
-SMALL_INPUT_EXEC_PARTITIONS = 8
-
-
-@contextmanager
-def small_input_exec(spark, input_bytes: int, partitions: int = SMALL_INPUT_EXEC_PARTITIONS):
-    """AQE off + few shuffle partitions while a SMALL operator's internal
-    actions run; both confs restored on exit. No-op under
-    :func:`lazy_plans` (explain tooling must see the scale shape), above
-    the input-size threshold, or with SPARK_GRAFT_SMALL_EXEC=0 (A/B
-    lever). Physical profile only — results are partition-layout
-    independent (the same contract the tiny-exec profile's result-
-    equality tests lock)."""
-    import os
-
-    enabled = (
-        _MATERIALIZE
-        and input_bytes < SMALL_INPUT_EXEC_MAX_BYTES
-        and os.environ.get("SPARK_GRAFT_SMALL_EXEC", "1").lower()
-        not in ("0", "false", "no")
-    )
-    if not enabled:
-        yield
-        return
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def materialize_and_release(out: DataFrame, *caches: DataFrame) -> DataFrame:

@@ -321,15 +321,10 @@ def minhash_lsh_pairs(
     )
     # materialize the (pairs-sized, small) verified output so the
     # signature cache releases NOW instead of accumulating across a
-    # many-query session (caching.py; no-op under lazy_plans). The build
-    # runs under the small-input execution scope (caching.py): at a few
-    # MB of corpus the band join + verify pay more in 32-partition task
-    # launches and AQE re-plans than the compute costs (interleaved A/B
-    # at sf0.1: 3-4x process CPU); a TB corpus keeps full width.
-    from ..caching import small_input_exec
-
-    with small_input_exec(df.sparkSession, _plan_size_bytes(df)):
-        return materialize_and_release(out, sig)
+    # many-query session (caching.py; no-op under lazy_plans). The
+    # physical profile it runs under is the caller's: registry queries
+    # get one per query at their entry (queries.SMALL_INPUT_BYTES).
+    return materialize_and_release(out, sig)
 
 
 def jaccard_pairs(
@@ -370,12 +365,7 @@ def jaccard_pairs(
             "jaccard",
         )
     )
-    # small-input execution scope: see minhash_lsh_pairs (same dispatch,
-    # same A/B evidence class)
-    from ..caching import small_input_exec
-
-    with small_input_exec(df.sparkSession, _plan_size_bytes(df)):
-        return materialize_and_release(out, base)
+    return materialize_and_release(out, base)
 
 
 def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
@@ -1032,12 +1022,7 @@ def containment_pairs_banded(
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")
     )
-    # small-input execution scope: see minhash_lsh_pairs (same dispatch,
-    # same A/B evidence class)
-    from ..caching import small_input_exec
-
-    with small_input_exec(df.sparkSession, _plan_size_bytes(df)):
-        return materialize_and_release(out, sig)
+    return materialize_and_release(out, sig)
 
 
 def _norm_tokens(text: Column) -> Column:

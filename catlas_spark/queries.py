@@ -19,7 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .caching import maybe_persist
+from .caching import is_materializing, maybe_persist
 from .session import AUTOBROADCAST_BYTES
 from .operators.dedup import MINHASH_P, minhash_coeffs
 from .operators.relational import (
@@ -143,9 +143,9 @@ def _ordered() -> dict[str, tuple[QueryFn, str | None]]:
 #
 # Honesty guard (machine-checked, not hand-labeled): a query is only
 # cacheable if its builder fn is PURE plan construction. On first call we
-# (a) count Spark jobs via the app status store — any fn that eagerly
-# computes (persist+count materialization, stats collects, streaming
-# runs) launches jobs and is permanently excluded, so its work can never
+# (a) count Spark jobs submitted — any fn that eagerly computes
+# (persist+count materialization, stats collects, streaming runs)
+# launches jobs and is permanently excluded, so its work can never
 # be skipped on a later pass; (b) snapshot the plan-shaping confs — a fn
 # that overrides them (bloom_pruned_join) is excluded because its
 # physical plan depends on confs that _session_tune restores between
@@ -157,21 +157,21 @@ def _ordered() -> dict[str, tuple[QueryFn, str | None]]:
 _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _PLAN_LAZY: dict[str, bool] = {}
 
-# Tiny-input execution profile (regime dispatch, same pattern as the
-# operator-level dispatchers): AQE's per-exchange re-planning adds a job
-# per query stage, and 32-partition shuffles add task-launch overhead —
-# pure cost when the ENTIRE input is a few hundred MB (measured on the
-# 139-query lazy set at sf0.1: 34.4 s → 29.8 s under AQE-off/8
-# partitions, worst single-query regression +0.11 s). Dispatch is by
-# Catalyst's optimized-plan size estimate at plan-cache time, so the
-# same query over a TB-scale input keeps AQE + full shuffle width (the
-# 1000-executor regime AQE exists for); LocalRelation's Long.MaxValue
-# sentinel also lands on the scale-safe default. Applied only on the
-# plan-cache hit path — eager builders tune their own sessions.
-# SPARK_GRAFT_TINY_EXEC=0 disables (A/B lever).
-TINY_EXEC_MAX_BYTES = 256 * 1024 * 1024
-TINY_EXEC_PARTITIONS = 8
-_PLAN_TINY: dict[tuple[str, str, str], bool] = {}
+# Execution profile: ONE per query, set at its registry entry (the
+# first statement of wrapped() below, on every path) by _session_tune.
+# Evidence: the total size of the input directory — known before any
+# builder runs (eager builders act INSIDE the build) and an upper bound
+# on every query's input, which a cross join's output estimate is not.
+# Below SMALL_INPUT_BYTES: AQE off (its per-exchange re-planning adds a
+# job per query stage, pure cost on a few-MB input) and a shuffle width
+# of at most SMALL_INPUT_PARTITIONS, never wider than the baseline.
+# Otherwise, and under lazy_plans (explain tooling sees the scale
+# shape), the baseline: AQE on, one shuffle partition per core. The
+# profile stays set through the caller's final action (run outside our
+# code) until the next query's entry resets it.
+SMALL_INPUT_BYTES = 64 * 1024 * 1024
+SMALL_INPUT_PARTITIONS = 8
+_INPUT_BYTES: dict[tuple[str, str], int] = {}
 
 _GUARD_CONFS = (
     "spark.sql.autoBroadcastJoinThreshold",
@@ -192,9 +192,11 @@ def _plan_cache_enabled() -> bool:
 
 
 def _n_jobs(spark: SparkSession) -> int:
-    # app status store sees EVERY job, including ones run under a job
-    # group (streaming micro-batches) that statusTracker(None) misses
-    return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+    # jobs ever submitted, any job group included (streaming
+    # micro-batches, which statusTracker(None) misses); the status
+    # store's job list is no count — Spark trims it at
+    # spark.ui.retainedJobs
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
 
 
 def _n_cache_entries(spark: SparkSession) -> int:
@@ -212,8 +214,9 @@ def _wrap_plan_cached(name: str, fn: QueryFn) -> QueryFn:
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .caching import is_materializing
-
+        # the query's one execution profile, on every path below; it
+        # also restores the baseline confs a prior builder overrode
+        _session_tune(spark, sf_dir)
         # Inside lazy_plans (explain-only tooling) every materializer is
         # a no-op, so an EAGER builder would read as lazy and its
         # lazy-mode plan would be cached for later NORMAL callers —
@@ -223,24 +226,12 @@ def _wrap_plan_cached(name: str, fn: QueryFn) -> QueryFn:
         key = (spark.sparkContext.applicationId, sf_dir, name)
         df = _PLAN_CACHE.get(key)
         if df is not None:
-            # restore baseline confs exactly as a fresh build would (the
-            # cached plan was built under them; physical planning at
-            # execution must see the same values)
-            _session_tune(spark)
-            if _PLAN_TINY.get(key) and os.environ.get(
-                "SPARK_GRAFT_TINY_EXEC", "1"
-            ).lower() not in ("0", "false", "no"):
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(TINY_EXEC_PARTITIONS)
-                )
             return df
         state = _PLAN_LAZY.get(name)
         if state is False:
             return fn(spark, sf_dir)
-        # Build under the laziness guard. Tune first so the conf delta we
-        # observe is fn's own, not a prior query's leak.
-        _session_tune(spark)
+        # Build under the laziness guard (the confs were just reset, so
+        # the conf delta observed is fn's own, not a prior query's leak)
         jobs_before = _n_jobs(spark)
         caches_before = _n_cache_entries(spark)
         conf_before = [spark.conf.get(k, None) for k in _GUARD_CONFS]
@@ -255,11 +246,7 @@ def _wrap_plan_cached(name: str, fn: QueryFn) -> QueryFn:
             # evict plans of dead sessions (same hygiene as _TABLE_CACHE)
             for k in [k for k in _PLAN_CACHE if k[0] != key[0]]:
                 del _PLAN_CACHE[k]
-                _PLAN_TINY.pop(k, None)
             _PLAN_CACHE[key] = df
-            from .partitioning import plan_size_bytes
-
-            _PLAN_TINY[key] = plan_size_bytes(df) < TINY_EXEC_MAX_BYTES
         else:
             # the FIRST read of a table launches a one-time metadata/
             # listing job that would misflag a lazy query, so an eager
@@ -327,44 +314,68 @@ def _text_tokens() -> Column:
     return tokens(F.col("text"))
 
 
-def _session_tune(spark: SparkSession) -> None:
-    # Session hardening for driver-owned sessions (all runtime-settable
-    # and cheap — ~0.5 ms total, so applied unconditionally):
-    # - split small single-file tables across cores
-    # - pin UTC so timestamp formatting matches the (naive) DuckDB oracle
+def _input_bytes(spark: SparkSession, sf_dir: str) -> int:
+    """Total bytes under ``sf_dir``, read once per (session, directory)
+    like _TABLE_CACHE."""
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, sf_dir)
+    n = _INPUT_BYTES.get(key)
+    if n is None:
+        for k in [k for k in _INPUT_BYTES if k[0] != app_id]:
+            del _INPUT_BYTES[k]
+        sc = spark.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(sf_dir)
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        n = fs.getContentSummary(path).getLength()
+        _INPUT_BYTES[key] = n
+    return n
+
+
+def _execution_profile(spark: SparkSession, sf_dir: str) -> dict[str, str]:
+    """The AQE and shuffle-width confs a registry query over ``sf_dir``
+    runs under (see SMALL_INPUT_BYTES); the baseline under lazy_plans."""
+    # baseline width: one per core (the driver's default 200 is sized
+    # for a cluster)
+    cores = spark.sparkContext.defaultParallelism
+    width = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores))
+    small = is_materializing() and _input_bytes(spark, sf_dir) < SMALL_INPUT_BYTES
+    return {
+        "spark.sql.adaptive.enabled": str(not small).lower(),
+        "spark.sql.shuffle.partitions": str(
+            min(width, SMALL_INPUT_PARTITIONS) if small else width
+        ),
+    }
+
+
+def _session_tune(spark: SparkSession, sf_dir: str) -> None:
+    """Apply the baseline confs and the query's execution profile (see
+    SMALL_INPUT_BYTES); called once per query, at its registry entry.
+
+    All runtime-settable and cheap, so applied unconditionally: split
+    small single-file tables across cores, and pin UTC so timestamp
+    formatting matches the (naive) DuckDB oracle."""
     spark.conf.set(
         "spark.sql.files.maxPartitionBytes",
         os.environ.get("SPARK_GRAFT_SPLIT_BYTES", str(2 * 1024 * 1024)),
     )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # right-size shuffles for the local harness (driver default is 200)
-    cores = spark.sparkContext.defaultParallelism
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cores)),
-    )
+    for k, v in _execution_profile(spark, sf_dir).items():
+        spark.conf.set(k, v)
     # restore the per-query conf overrides: queries that demonstrate
     # shuffle-join-only optimizations (runtime bloom filter) lower these
     # for their own plan; resetting here scopes each override to one
-    # query. The broadcast threshold restores to whatever
-    # session.AUTOBROADCAST_BYTES says (currently Spark's 10MB default)
-    # — restoring to the CONSTANT, not a hardcoded literal, keeps the
-    # session tuning live if that constant is ever retuned. The bloom
-    # scan-size threshold restores to Spark's 10GB default (previously
-    # it leaked at 1KB for the rest of the session, injecting runtime
-    # bloom filters into every later shuffle-join plan). Shared by _t()
-    # AND _events() (r8 review: ~27 events-only queries restored neither,
-    # so bloom_pruned_join's overrides leaked into whatever events query
-    # the LRU window put after it — identical results, drifted timings).
+    # query, events-only queries included. The broadcast threshold
+    # restores to whatever session.AUTOBROADCAST_BYTES says (currently
+    # Spark's 10MB default) — restoring to the CONSTANT, not a hardcoded
+    # literal, keeps the session tuning live if that constant is ever
+    # retuned. The bloom scan-size threshold restores to Spark's 10GB
+    # default (otherwise it leaks at 1KB, injecting runtime bloom
+    # filters into every later shuffle-join plan).
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(AUTOBROADCAST_BYTES))
     spark.conf.set(
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
         "10GB",
     )
-    # the tiny-input execution profile (plan-cache hit path) disables
-    # AQE for ITS query only — restore the engine default here so the
-    # override is scoped exactly like the broadcast/bloom ones above
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     # events NANOS flavor support: physical planning (where hadoopConf is
     # captured) happens at EXECUTION for a lazy plan, which with the plan
     # cache can be long after _events() built it — so the conf must be
@@ -373,7 +384,6 @@ def _session_tune(spark: SparkSession) -> None:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _session_tune(spark)
     app_id = spark.sparkContext.applicationId
     key = (app_id, sf_dir, name)
     df = _TABLE_CACHE.get(key)
@@ -397,7 +407,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed between rounds before."""
     from catlas_spark.sources.events_io import normalize_ts, probe_ts_flavor
 
-    _session_tune(spark)
     # harmless for micros files; lets a NANOS file read as bigint instead of failing
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = (spark.sparkContext.applicationId, sf_dir, "events__normalized")
@@ -2950,7 +2959,8 @@ def q_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the join shuffle (Catalyst InjectRuntimeFilter). At 100 TB
     both sides exceed the broadcast threshold and this is the default
     plan; at bench scale the threshold is lowered for THIS query only
-    (the next `_t()` call restores it) to exercise the shuffle-join path.
+    (the next registry query's entry restores it) to exercise the
+    shuffle-join path.
     Plan assertion lives in tests/test_physical_plans.py."""
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 450000)
@@ -4471,14 +4481,8 @@ def q_incremental_dedup_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from .caching import (
-        SMALL_INPUT_EXEC_MAX_BYTES,
-        materialize_and_release,
-        small_input_exec,
-    )
     from .functions.text import fingerprint
     from .memo import memoize
-    from .partitioning import plan_size_bytes
 
     scratch = os.path.join(
         tempfile.gettempdir(),
@@ -4500,25 +4504,16 @@ def q_incremental_dedup_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     def compute_fp(df: DataFrame) -> DataFrame:
         return df.withColumn("fp", fingerprint(F.col("text")))
 
-    # the two memoize passes run 4+ join plans over a few-MB corpus, and
-    # each append/serving action fanned into AQE stage jobs — 25 jobs per
-    # invocation measured at sf0.1. Small-input execution scope (the
-    # eager twin of the tiny-exec profile, caching.py) + materializing
-    # the tiny (delta-sized) result INSIDE the scope so the bench's sink
-    # reads the cache instead of re-planning the serving joins under the
-    # session profile. Dispatch is by input size estimate; a TB corpus
-    # keeps AQE + full width and returns the lazy plan unchanged.
-    with small_input_exec(spark, plan_size_bytes(d)):
-        base_fp = memoize(spark, base, ["text"], compute_fp, scratch, version="fp1")
-        keepers = base_fp.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
-        # delta pass: re-crawled texts are memo HITS (no recompute)
-        delta_fp = memoize(spark, delta, ["text"], compute_fp, scratch, version="fp1")
-        out = delta_fp.join(keepers, "fp", "left").select(
-            "doc_id", F.coalesce("keep_id", F.lit(-1)).cast("long").alias("dup_of")
-        )
-        if plan_size_bytes(d) < SMALL_INPUT_EXEC_MAX_BYTES:
-            return materialize_and_release(out)
-        return out
+    base_fp = memoize(spark, base, ["text"], compute_fp, scratch, version="fp1")
+    keepers = base_fp.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
+    # delta pass: re-crawled texts are memo HITS (no recompute)
+    delta_fp = memoize(spark, delta, ["text"], compute_fp, scratch, version="fp1")
+    # returned lazy: at sf0.1 materializing this (delta-sized) result
+    # inside the build measured no faster than re-planning the serving
+    # joins in the caller's action (median 2.26 vs 2.36 s, local[4])
+    return delta_fp.join(keepers, "fp", "left").select(
+        "doc_id", F.coalesce("keep_id", F.lit(-1)).cast("long").alias("dup_of")
+    )
 
 
 _BANNER = "subscribe now click here to continue reading the full article"

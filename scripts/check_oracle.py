@@ -140,10 +140,10 @@ def main() -> int:
             n_pass += 1
     # Cache-HIT-path spot check (r11 verdict item 6): the loop above
     # always exercises the plan-cache MISS path (first sighting per
-    # process); the bench's warm passes run the HIT path under the
-    # tiny-exec profile. Re-invoke one lazy query a second time — the
-    # cached plan, tiny profile engaged — and compare that result to the
-    # oracle too, so a hit-path divergence can never ship silently.
+    # process); the bench's warm passes run the HIT path. Re-invoke one
+    # lazy query a second time — the cached plan — and compare that
+    # result to the oracle too, so a hit-path divergence can never ship
+    # silently.
     hit_name = "pricing_summary"
     if (not only or hit_name in only) and hit_name in oracles:
         try:

@@ -12,10 +12,10 @@ and in a worktree checked out at the previous round's commit:
 
 Unlike dump_plans.py (PLANS.md excerpts, tree only), this keeps the
 numbered-operator detail section so PushedFilters / ReadSchema / join
-build sides are inspectable.  For queries flagged by the tiny-input
-execution profile the plan is ALSO dumped under that profile's confs
-(AQE off, TINY_EXEC_PARTITIONS shuffle partitions) when the registry
-supports it, because that is the shape the bench executes.
+build sides are inspectable.  Each plan is explained under the execution
+profile the query runs with (AQE and shuffle width, chosen at its
+registry entry from the input size), named in the file's header,
+because that is the shape a normal call executes.
 """
 
 from __future__ import annotations
@@ -50,7 +50,6 @@ def main() -> None:
     from catlas_spark.caching import lazy_plans
 
     qs = Q.queries()
-    tiny_exec = getattr(Q, "TINY_EXEC_PARTITIONS", None)
     for name in names:
         if name not in qs:
             out = f"(query `{name}` does not exist at this commit)\n"
@@ -61,46 +60,22 @@ def main() -> None:
             continue
         with lazy_plans():
             df = qs[name](spark, sf)
+        # lazy_plans keeps the scale profile; explain under the one a
+        # normal call of this query sets (a builder's own conf
+        # overrides stay in place, as they would at its execution)
+        profile = Q._execution_profile(spark, sf)
+        for k, v in profile.items():
+            spark.conf.set(k, v)
         header = (
             f"# {name} — {suffix} ({os.path.basename(sf)}, "
-            "explain('formatted'))\n\n"
+            "explain('formatted'); execution profile: "
+            + ", ".join(f"{k}={v}" for k, v in profile.items())
+            + ")\n\n"
         )
-        body = _explain(df)
-        tiny_note = ""
-        # if this plan lands in the tiny class, ALSO dump the executed
-        # shape (the bench-hit path runs with AQE off / few partitions) —
-        # to a SEPARATE .tiny.txt file (r11 verdict item 8: an embedded
-        # second plan inflates raw Exchange counts, so exchange-count
-        # claims could not be diffed mechanically from one file).
-        # _PLAN_TINY is only populated on the materializing cache path,
-        # so re-derive tininess directly from the plan-size estimate.
-        if tiny_exec is not None:
-            from catlas_spark.partitioning import plan_size_bytes
-
-            if plan_size_bytes(df) < Q.TINY_EXEC_MAX_BYTES:
-                prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-                prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                spark.conf.set("spark.sql.shuffle.partitions", str(tiny_exec))
-                try:
-                    tiny_note = (
-                        f"# {name} — {suffix} tiny-input execution profile "
-                        f"(AQE off, {tiny_exec} shuffle partitions — the "
-                        "shape the bench executes for this plan):\n\n"
-                        + _explain(df)
-                    )
-                finally:
-                    spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-                    spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(header + body)
+            f.write(header + _explain(df))
         print(f"wrote {path}", file=sys.stderr)
-        if tiny_note:
-            tiny_path = os.path.join(outdir, f"{name}_{suffix}.tiny.txt")
-            with open(tiny_path, "w") as f:
-                f.write(tiny_note)
-            print(f"wrote {tiny_path}", file=sys.stderr)
 
 
 if __name__ == "__main__":

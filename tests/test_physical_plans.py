@@ -52,7 +52,7 @@ def _all_plans(spark, sf_dir) -> dict[str, str]:
     # the last-built query may have left a per-query conf override set
     # (bloom_pruned_join's builder does); restore the baseline so the
     # sweep cannot leak plan-shaping confs into later tests
-    Q._session_tune(spark)
+    Q._session_tune(spark, sf_dir)
     return _PLAN_TEXTS
 
 
@@ -198,7 +198,8 @@ def test_bloom_filter_join_pruning(spark, sf_dir):
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "might_contain" in plan
     assert "bloom_filter_agg" in plan
-    # the override is scoped: the next _t() restores the broadcast default
+    # the override is scoped: the next query's entry restores the
+    # broadcast default
     Q.queries()["join_revenue_per_nation"](spark, sf_dir)
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "10485760"
 
@@ -576,13 +577,14 @@ def test_events_scan_restores_per_query_conf_overrides(spark, sf_dir):
     broadcast threshold nor the bloom scan-size threshold, so
     bloom_pruned_join's plan overrides leaked into whatever events query
     the LRU window placed after it (identical results, drifted timings —
-    invisible to the oracle gate). _events now shares _t's restore."""
+    invisible to the oracle gate). Every registry query's entry now
+    restores them, events-only queries included."""
     from catlas_spark import queries as Q
     from catlas_spark.session import AUTOBROADCAST_BYTES
 
     Q.queries()["bloom_pruned_join"](spark, sf_dir)  # sets the overrides
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
-    Q._events(spark, sf_dir)  # an events-only query's table access
+    Q.queries()["rolling_active_users"](spark, sf_dir)  # reads only events
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(
         AUTOBROADCAST_BYTES
     )

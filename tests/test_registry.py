@@ -5,6 +5,8 @@ No SparkSession needed."""
 
 from __future__ import annotations
 
+import pytest
+
 from catlas_spark.queries import _REGISTRY, _correctness_history, _ordered, oracle_sql, queries
 
 WINDOW = 50  # the driver checks the first 50 queries() entries
@@ -202,19 +204,42 @@ def test_plan_cache_excludes_lazy_persist(spark, sf_dir, monkeypatch):
         spark.catalog.clearCache()
 
 
+_PROFILE_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+def _profile_confs(spark) -> dict[str, str]:
+    return {k: spark.conf.get(k) for k in _PROFILE_CONFS}
+
+
+def test_n_jobs_counts_past_the_retained_job_limit(spark):
+    """_n_jobs counts every job submitted, not the status store's job
+    list, which Spark trims at spark.ui.retainedJobs (the trimmed list
+    made the plan-cache laziness guard and its tests misjudge counts)."""
+    import catlas_spark.queries as Q
+
+    retained = int(spark.sparkContext.getConf().get("spark.ui.retainedJobs", "1000"))
+    n = retained + 1
+    jrdd = spark.range(1)._jdf.javaRDD()  # JVM-only: one job per count
+    j0 = Q._n_jobs(spark)
+    for _ in range(n):
+        jrdd.count()
+    assert Q._n_jobs(spark) - j0 == n
+
+
 def test_tiny_exec_profile_results_match_default(spark, sf_dir, monkeypatch):
-    """The tiny-input execution profile (AQE off, 8 shuffle partitions on
-    the plan-cache hit path) must be a pure physical-regime change: for
-    shuffle-heavy lazy queries the collected result under the tiny
-    profile equals the first-call (default-profile) result."""
+    """The small-input execution profile (AQE off, at most 8 shuffle
+    partitions) must be a pure physical-regime change: each query's
+    sorted rows under it equal those under the baseline profile (forced
+    by a zero threshold). Covers shuffle-heavy lazy queries, the seeded
+    samplers (Spark's rand(seed) depends on partition layout; the
+    repo's hash-based sampling convention must not), the window family,
+    and the eager dedup builders whose in-builder actions run under the
+    profile."""
     Q = _fresh_plan_cache(monkeypatch)
-    monkeypatch.setattr(Q, "_PLAN_TINY", {})
-    # seeded-sampling queries included (r11 verdict item: if any sampler
-    # ever depended on partition layout — Spark's rand(seed) does — the
-    # bench's hit path would silently run a different result than the one
-    # the oracle blessed; the repo's hash-based sampling convention makes
-    # this hold, and this test keeps it held); window_lag_lead covers the
-    # window-function family under the 8-partition profile.
+    # fresh builds every call: a cached plan object keeps the physical
+    # plan of its first execution
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    threshold = Q.SMALL_INPUT_BYTES
     for name in (
         "timeseries_gapfill",
         "grouped_topk",
@@ -223,22 +248,85 @@ def test_tiny_exec_profile_results_match_default(spark, sf_dir, monkeypatch):
         "train_test_split",
         "weighted_sample",
         "window_lag_lead",
+        "dedup_minhash_lsh",
+        "dedup_ngram_jaccard",
+        "dedup_containment_banded",
+        "incremental_dedup_memo",
+        "dedup_containment",
     ):
         fn = Q.queries()[name]
-        baseline = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        fn(spark, sf_dir)  # second sighting -> cached + tiny verdict
-        assert Q._PLAN_LAZY[name] is True
-        key = next(k for k in Q._PLAN_CACHE if k[2] == name)
-        # force the tiny verdict so the test exercises the profile even
-        # if the size estimate ever crosses the threshold
-        Q._PLAN_TINY[key] = True
+        rows = {}
+        for label, limit in (("small", threshold), ("baseline", 0)):
+            monkeypatch.setattr(Q, "SMALL_INPUT_BYTES", limit)
+            df = fn(spark, sf_dir)
+            assert spark.conf.get("spark.sql.adaptive.enabled") == str(
+                label == "baseline"
+            ).lower()
+            rows[label] = sorted(map(tuple, df.collect()))
+            # drop the materialized result so the next build cannot
+            # read it back through a canonicalized-plan cache match
+            del df
+            spark.catalog.clearCache()
+        assert rows["small"] == rows["baseline"], f"{name}: profile changed the result"
+
+
+def test_one_profile_per_query(spark, sf_dir, monkeypatch):
+    """Every registry query runs under ONE execution profile, set at its
+    registry entry: a lazy query's plan-cache miss and hit leave the
+    same confs; an eager builder's in-builder actions and its final
+    action see the same profile; and a builder that sets confs and then
+    raises does not leak them into the next registry query."""
+    import catlas_spark.operators.dedup as D
+    from catlas_spark.session import AUTOBROADCAST_BYTES
+
+    Q = _fresh_plan_cache(monkeypatch)
+    profile = Q._execution_profile(spark, sf_dir)
+    # sf0.001 is far below the threshold: the small profile applies
+    assert profile["spark.sql.adaptive.enabled"] == "false"
+
+    def scramble():  # the opposite of the profile, as a prior query might leave it
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+
+    # lazy query: miss (first sightings) and hit
+    fn = Q.queries()["pricing_summary"]
+    seen = []
+    for _ in range(3):
+        scramble()
         df = fn(spark, sf_dir)
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        tiny = sorted(map(tuple, df.collect()))
-        assert tiny == baseline, f"{name}: tiny profile changed the result"
-    # the override is scoped: the next query's tune restores AQE
-    Q._session_tune(spark)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        seen.append(_profile_confs(spark))
+    assert fn(spark, sf_dir) is df, "third call must be a plan-cache hit"
+    assert seen == [profile] * 3
+
+    # eager builder: the profile its in-builder actions run under
+    in_builder = []
+    real = D.materialize_and_release
+
+    def spy(out, *caches):
+        in_builder.append(_profile_confs(spark))
+        return real(out, *caches)
+
+    monkeypatch.setattr(D, "materialize_and_release", spy)
+    scramble()
+    df = Q.queries()["dedup_minhash_lsh"](spark, sf_dir)
+    assert in_builder == [profile]
+    assert _profile_confs(spark) == profile  # what its final action sees
+    df.write.format("noop").mode("overwrite").save()
+    del df
+
+    # a builder that overrides confs, then raises mid-build
+    def raiser(spark, sf_dir):
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        scramble()
+        raise RuntimeError("mid-build failure")
+
+    with pytest.raises(RuntimeError):
+        Q._wrap_plan_cached("__raiser__", raiser)(spark, sf_dir)
+    Q.queries()["pricing_summary"](spark, sf_dir)
+    assert _profile_confs(spark) == profile
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(
+        AUTOBROADCAST_BYTES
+    )
 
 
 def test_plan_cache_bypassed_under_lazy_plans(spark, sf_dir, monkeypatch):
