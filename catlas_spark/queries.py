@@ -243,10 +243,7 @@ def _wrap_plan_cached(name: str, fn: QueryFn) -> QueryFn:
         )
         if lazy:
             _PLAN_LAZY[name] = True
-            # evict plans of dead sessions (same hygiene as _TABLE_CACHE)
-            for k in [k for k in _PLAN_CACHE if k[0] != key[0]]:
-                del _PLAN_CACHE[k]
-            _PLAN_CACHE[key] = df
+            _remember(_PLAN_CACHE, key, df)
         else:
             # the FIRST read of a table launches a one-time metadata/
             # listing job that would misflag a lazy query, so an eager
@@ -280,6 +277,18 @@ def oracle_sql() -> dict[str, str]:
 # testdata assumption documented (a changed directory needs a new key
 # or process, same as any metastore cache).
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+
+
+def _remember(memo: dict, key: tuple, value):
+    """``memo[key] = value`` for the per-session memos (_TABLE_CACHE,
+    _PLAN_CACHE, _INPUT_BYTES), whose keys start with the applicationId.
+    Entries of other sessions are evicted first: they hold py4j
+    references into stopped JVMs and would accumulate forever in a
+    process that cycles sessions."""
+    for k in [k for k in memo if k[0] != key[0]]:
+        del memo[k]
+    memo[key] = value
+    return value
 
 
 def _norm_text() -> Column:
@@ -317,17 +326,13 @@ def _text_tokens() -> Column:
 def _input_bytes(spark: SparkSession, sf_dir: str) -> int:
     """Total bytes under ``sf_dir``, read once per (session, directory)
     like _TABLE_CACHE."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
+    sc = spark.sparkContext
+    key = (sc.applicationId, sf_dir)
     n = _INPUT_BYTES.get(key)
     if n is None:
-        for k in [k for k in _INPUT_BYTES if k[0] != app_id]:
-            del _INPUT_BYTES[k]
-        sc = spark.sparkContext
         path = sc._jvm.org.apache.hadoop.fs.Path(sf_dir)
         fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-        n = fs.getContentSummary(path).getLength()
-        _INPUT_BYTES[key] = n
+        n = _remember(_INPUT_BYTES, key, fs.getContentSummary(path).getLength())
     return n
 
 
@@ -388,13 +393,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (app_id, sf_dir, name)
     df = _TABLE_CACHE.get(key)
     if df is None:
-        # evict plans of dead sessions: entries keyed by stale appIds
-        # hold py4j references into stopped JVMs and accumulate forever
-        # in a process that cycles sessions
-        for k in [k for k in _TABLE_CACHE if k[0] != app_id]:
-            del _TABLE_CACHE[k]
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _TABLE_CACHE[key] = df
+        df = _remember(_TABLE_CACHE, key, spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     return df
 
 
@@ -414,11 +413,14 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ev is None:
         # unit decided ONCE PER FILE from the parquet logical type (footer
         # probe) — never per-row by magnitude, which misreads pre-1973 nanos
-        ev = normalize_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet"),
-            probe_ts_flavor(f"{sf_dir}/events.parquet"),
+        ev = _remember(
+            _TABLE_CACHE,
+            key,
+            normalize_ts(
+                spark.read.parquet(f"{sf_dir}/events.parquet"),
+                probe_ts_flavor(f"{sf_dir}/events.parquet"),
+            ),
         )
-        _TABLE_CACHE[key] = ev
     return ev
 
 

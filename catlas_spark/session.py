@@ -34,6 +34,21 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 # explicit hints regardless. Tune per deployment at cluster scale.
 AUTOBROADCAST_BYTES = 10 * 1024 * 1024
 
+# Default driver heap: a quarter of physical RAM (the JVM's own default
+# share), capped. The JVM grows its heap lazily up to -Xmx, so a cap
+# above the machine's memory lets a long many-query session grow until
+# the OS kills it; the rest of RAM is left for off-heap buffers, the code
+# cache, the Python workers and the driver process's own work.
+# SPARK_GRAFT_DRIVER_MEM overrides.
+DRIVER_MEM_SHARE_OF_RAM = 0.25
+DRIVER_MEM_CAP_GB = 48
+
+
+def _default_driver_mem() -> str:
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(DRIVER_MEM_CAP_GB, int(ram * DRIVER_MEM_SHARE_OF_RAM) >> 30))}g"
+
+
 def get_spark(
     app_name: str = "catlas_spark",
     cpus: int | None = None,
@@ -60,7 +75,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
+        )
         # the default 240MB JIT code cache churns under a many-query
         # session's generated-class volume (10k codegen cache entries
         # above) — flushed JIT code re-compiles mid-pass and shows up as

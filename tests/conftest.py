@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import os
 import sys
 
 import pytest
@@ -12,12 +11,6 @@ from catlas_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # bound the driver heap: the session default (48g) lets G1 grow the
-    # heap past physical memory on machines with less RAM than that, and
-    # the suite's many-task stretches (tests that follow a registry
-    # query run under its small-input profile: AQE off, one task per
-    # shuffle partition) grew it to 15 GB and got the JVM killed
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     s = get_spark("tests", cpus=8, shuffle_partitions=2)
     yield s
 
