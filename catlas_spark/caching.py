@@ -1,52 +1,40 @@
-"""Cache-lifetime discipline for operators that persist a reused subtree.
+"""Cache lifetime for operators that persist a reused subtree.
 
-The pattern (established for `dedup_cluster_keep_best`, then applied
-module-wide): materialize the operator's SMALL output eagerly so the big
-persisted intermediate can be released immediately, instead of pinning
-executor memory until the caller's collect — across a 130-query session,
-unreleased MEMORY_ONLY caches accumulate.
+An operator materializes its SMALL output eagerly
+(:func:`materialize_and_release`) so the big persisted intermediates it
+read are released at once, not pinned until the caller's action.
+
+**One lifetime rule.** Every frame that needs a cache entry registers
+as a HOLDER of it (:func:`hold`); the entry is unpersisted when its last
+holder is garbage-collected, and releasing an intermediate
+(:func:`release`) is a no-op while a live holder holds the same entry.
+Entries are identified by their buffer RDD id, not by plan: Spark's
+CacheManager matches entries by CANONICALIZED PLAN, so a re-run of a
+query shares the older result's entry, and a release keyed by plan let
+the dropped older frame uncache the newer one (its action then
+recomputed everything: for ``dedup_minhash_lsh`` at sf0.1 on local[4],
+3 jobs and 3.8 s instead of 1 job and 0.1 s). At refcount 0 the entry is
+unpersisted only if the plan still maps to the same buffer RDD, so a
+newer entry for that plan (after a ``clearCache``) is never touched.
+An entry never released is worse than a leak: a later query deriving
+the same subtree silently reads it (a cache hit, not the plan).
 
 Materialization is ``persist(MEMORY_AND_DISK) + count()``, NOT
-``localCheckpoint()``: local wall-clock is a wash (clean isolated A/B
-over the dedup family, medians within ±0.1-0.5 s either way — an
-earlier measurement suggesting persist was 0.5-1.3 s faster was
-contaminated by cross-query cache pollution, see below), but
-``localCheckpoint`` TRUNCATES lineage, so on a real cluster a lost
-executor block makes every downstream action fail; the cache keeps
-lineage and a lost block recomputes (slowly, through the
-now-unpersisted subtree) instead of failing. At 1000 executors that
-robustness is the deciding property.
+``localCheckpoint()``, which TRUNCATES lineage: on a real cluster a lost
+executor block would make every downstream action fail, while the cache
+keeps lineage and a lost block recomputes. MEMORY_AND_DISK because
+MEMORY_ONLY silently drops partitions under pressure.
 
-MEMORY_AND_DISK (not MEMORY_ONLY) because the contract is "the big
-caches are released, the small output is materialized": MEMORY_ONLY
-silently DROPS partitions under pressure, and an evicted output
-partition would recompute through the now-unpersisted subtree.
-
-Unlike checkpointed RDD blocks (cleaned by the ContextCleaner when the
-DataFrame is garbage-collected), a persisted DataFrame is pinned by the
-session CacheManager until an explicit unpersist — so a weakref
-finalizer on the returned frame unpersists it when the caller drops the
-last reference, restoring release-on-GC across a many-query session.
-Without the finalizer this is worse than a leak: the CacheManager
-matches cache entries by CANONICALIZED PLAN, so a later query that
-derives the same subtree silently reads the stale entry and benchmarks
-measure a cache hit instead of the plan (observed: dedup_minhash_lsh
-"ran" in 0.49 s because a prior query's lingering output matched).
-
-The cost of the discipline is plan opacity of the returned frame (it
-explains as an InMemoryTableScan). Tooling that needs the REAL lazy plan
-(the plan-regression sweep, the PLANS.md generator) wraps its calls in
-:func:`lazy_plans`, which turns :func:`materialize_and_release` into a
-no-op — the operators then return their full lazy trees (with the
-caches left to the ContextCleaner, fine for explain-only use).
-
+The returned frame explains as an InMemoryTableScan; tooling that needs
+the REAL lazy plan (the plan-regression sweep, the PLANS.md generator)
+wraps its calls in :func:`lazy_plans`, where materialization is a no-op.
 Nothing here sets execution confs: the materializing actions run under
-the caller's physical profile (AQE, shuffle width), which for registry
-queries is decided once per query at its entry (queries.SMALL_INPUT_BYTES).
+the caller's profile (for registry queries, set once at their entry).
 """
 
 from __future__ import annotations
 
+import threading
 import weakref
 from contextlib import contextmanager
 
@@ -59,15 +47,73 @@ _MATERIALIZE = True
 # one warning per context, not one per pin() call
 _CKPT_CLEANER_WARNED: set[str] = set()
 
+# live holders per cache entry, keyed by the entry's buffer RDD id;
+# finalizers run on whichever thread collects the holder, hence the lock
+_HOLDERS: dict[int, int] = {}
+_HOLDERS_LOCK = threading.RLock()
 
-def _release_on_gc(jdf) -> None:
-    """Finalizer body: unpersist the JVM Dataset when the Python frame is
-    collected (guarded — the JVM/py4j gateway may already be gone at
-    interpreter shutdown)."""
+
+def _entry_id(jdf) -> int | None:
+    """Buffer RDD id of the cache entry ``jdf``'s plan maps to, or None
+    when there is none or its buffers are not loaded yet (asking an
+    unbuilt entry for its buffers builds them, which runs the plan)."""
+    entry = jdf.sparkSession().sharedState().cacheManager().lookupCachedData(jdf)
+    if entry.isEmpty():
+        return None
+    builder = entry.get().cachedRepresentation().cacheBuilder()
+    if not builder.isCachedColumnBuffersLoaded():
+        return None
+    return builder.cachedColumnBuffers().id()
+
+
+def _drop_holder(eid: int, jdf) -> None:
+    """Finalizer body: one holder of entry ``eid`` died; at the last one
+    unpersist the entry if ``jdf``'s plan still maps to it (guarded —
+    the py4j gateway may already be gone at interpreter shutdown)."""
+    with _HOLDERS_LOCK:
+        _HOLDERS[eid] -= 1
+        if _HOLDERS[eid]:
+            return
+        del _HOLDERS[eid]
     try:
-        jdf.unpersist(False)
+        if _entry_id(jdf) == eid:
+            jdf.unpersist(False)
     except Exception:
         pass
+
+
+def hold(holder: DataFrame, cached: DataFrame) -> DataFrame:
+    """Register ``holder`` as a holder of the (materialized) cache entry
+    that ``cached``'s plan maps to; returns ``holder``. A frame derived
+    from a materialized one holds its parent's entry this way, so the
+    entry outlives the parent's wrapper."""
+    eid = _entry_id(cached._jdf)
+    if eid is not None:
+        with _HOLDERS_LOCK:
+            _HOLDERS[eid] = _HOLDERS.get(eid, 0) + 1
+        weakref.finalize(holder, _drop_holder, eid, cached._jdf)
+    return holder
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist ``df``'s cache entry unless a live holder holds it."""
+    if not _HOLDERS or _entry_id(df._jdf) not in _HOLDERS:
+        df.unpersist(blocking=False)
+
+
+def run_builder(build, spark, *args) -> DataFrame:
+    """``build(spark, *args)``; a build that raises (say, between an
+    operator's :func:`maybe_persist` and its release) leaves none of the
+    cache entries it registered behind."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.cachedData()
+    try:
+        return build(spark, *args)
+    except Exception:
+        new = cm.cachedData().diff(before)
+        for i in range(new.size()):
+            cm.uncacheQuery(spark._jsparkSession, new.apply(i).plan(), False, False)
+        raise
 
 
 _LAZY_PINS: list[DataFrame] = []
@@ -114,28 +160,18 @@ def maybe_persist(
 ) -> DataFrame:
     """``persist()`` gated on the materialize flag — the ONLY way an
     operator whose release path is :func:`materialize_and_release`
-    should register a cache.
-
-    Under :func:`lazy_plans` the frame is returned unpersisted: an
-    unconditional ``persist()`` there is worse than a leak, because
-    ``materialize_and_release`` is a no-op in that mode and never
-    unpersists, leaving a canonicalized-plan CacheManager entry that a
-    LATER query deriving the same subtree silently builds and reads
-    (the exact stale-cache hazard described above).
-    """
+    should register a cache: under :func:`lazy_plans` nothing is
+    released, so an unconditional ``persist()`` there would leave an
+    entry for a later query to read (the hazard described above)."""
     if not _MATERIALIZE:
         return df
     return df.persist(level)
 
 
 def materialize_and_release(out: DataFrame, *caches: DataFrame) -> DataFrame:
-    """Materialize ``out`` (persist + count) and unpersist ``caches``.
-
-    The returned frame's cache entry is unpersisted automatically when
-    the caller drops the last reference (weakref finalizer), so operator
-    outputs do not accumulate in the CacheManager across a session.
-    Under :func:`lazy_plans` this is a no-op returning ``out`` unchanged.
-    """
+    """Materialize ``out`` (persist + count), :func:`hold` it and
+    :func:`release` ``caches``. Under :func:`lazy_plans` this is a no-op
+    returning ``out`` unchanged."""
     if not _MATERIALIZE:
         return out
     out = out.persist(StorageLevel.MEMORY_AND_DISK)
@@ -144,35 +180,16 @@ def materialize_and_release(out: DataFrame, *caches: DataFrame) -> DataFrame:
     except Exception:
         # release-on-error (r8 review): a failed materializing count
         # (bad plan, executor loss, ANSI abort in the subtree) must not
-        # leave `out` registered in the CacheManager with no finalizer
+        # leave `out` registered in the CacheManager with no holder
         # — the stale-canonicalized-plan hazard this module documents —
         # nor keep the upstream caches pinned for the session
-        out.unpersist(blocking=False)
-        for c in caches:
-            c.unpersist(blocking=False)
+        for c in (out, *caches):
+            release(c)
         raise
-    weakref.finalize(out, _release_on_gc, out._jdf)
+    hold(out, out)
     for c in caches:
-        c.unpersist(blocking=False)
+        release(c)
     return out
-
-
-def keep_alive(child: DataFrame, *parents: DataFrame) -> DataFrame:
-    """Tie a materialized parent's release-on-GC to a DERIVED frame's
-    lifetime.
-
-    A caller that post-processes a :func:`materialize_and_release`
-    output (select / cast / filter) returns a NEW Python wrapper; the
-    operator output's local name dies at function return, the weakref
-    finalizer fires, and the just-counted cache is unpersisted BEFORE
-    the caller's action ever runs — a silent full recompute of the
-    operator pipeline (caught at the r8 100x triangle stress: ten extra
-    jobs re-running the whole 60M-row pair build after the M&R count
-    had already done it). Attaching the parents to the child keeps the
-    finalizer armed until the derived frame itself is dropped, which is
-    the lifetime the release-on-GC discipline intended."""
-    child._mr_keepalive = getattr(child, "_mr_keepalive", ()) + tuple(parents)
-    return child
 
 
 def pin(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -224,7 +241,7 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
         # per ADVICE r8): checkpoint files are deleted on RDD GC only when
         # spark.cleaner.referenceTracking.cleanCheckpoints=true, which is
         # STATIC (ContextCleaner captures it at context create —
-        # session.get_session sets it; a driver-owned session must set it
+        # session.get_spark sets it; a driver-owned session must set it
         # itself). The accumulation hazard exists no matter WHO set the
         # checkpoint dir, so warn once per context regardless — a
         # driver-owned session that called setCheckpointDir itself but

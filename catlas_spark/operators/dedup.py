@@ -38,7 +38,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..caching import materialize_and_release, maybe_persist
+from ..caching import materialize_and_release, maybe_persist, release
 from ..functions.text import char_shingles, fingerprint, token_shingles
 
 
@@ -528,10 +528,10 @@ def connected_components(
             # release on the error path too (fetch failure mid-collect)
             # — same stale-canonicalized-plan hazard as the distributed
             # regime's finally below
-            edges.unpersist(blocking=False)
+            release(edges)
             raise
     if rows is not None and len(rows) <= driver_max_edges:
-        edges.unpersist(blocking=False)
+        release(edges)
         parent: dict = {}
 
         def _find(x):
@@ -622,7 +622,7 @@ def connected_components(
         # MEMORY_ONLY edge cache would otherwise stay pinned in the
         # CacheManager for the rest of the session — exactly the
         # stale-canonicalized-plan hazard documented above (ADVICE r6)
-        edges.unpersist()
+        release(edges)
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 

@@ -190,7 +190,7 @@ def triangle_participation(
     threshold. Returns (node, n_triangles) for nodes in at least one
     triangle.
     """
-    from ..caching import is_materializing, materialize_and_release, maybe_persist
+    from ..caching import is_materializing, materialize_and_release, maybe_persist, release
 
     # self-loops and NULL endpoints carry no triangle information and
     # would diverge the regimes (a self-loop closes fake wedges in the
@@ -290,7 +290,7 @@ def triangle_participation(
     try:
         rows = canon.limit(driver_max_edges + 1).collect()
         if len(rows) <= driver_max_edges:
-            canon.unpersist(blocking=False)
+            release(canon)
             adj: dict = {}
             for r in rows:
                 u_, v_ = r["u"], r["v"]
@@ -321,5 +321,5 @@ def triangle_participation(
         out = _naive_plan() if n_edges <= naive_max_edges else _degree_plan()
         return materialize_and_release(out, canon)
     except Exception:
-        canon.unpersist(blocking=False)  # release on every error path
+        release(canon)  # on every error path
         raise

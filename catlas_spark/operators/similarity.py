@@ -578,10 +578,10 @@ def two_level_assign(
     # UNPERSISTED derived `centroids` plan (e.g. a kmeans iteration's
     # recompute aggregate) would re-run in full for each, exactly the
     # cost this regime exists to bound. k rows — always cacheable.
-    # Released when the RETURNED frame is dropped (weakref finalizer,
-    # the materialize_and_release lifetime discipline); no-op under
-    # lazy_plans (maybe_persist gates on the flag).
-    from ..caching import is_materializing, maybe_persist
+    # Released when the RETURNED frame, its holder, is dropped
+    # (caching.hold); no-op under lazy_plans (maybe_persist gates on
+    # the flag).
+    from ..caching import hold, is_materializing, maybe_persist, release
 
     centroids = maybe_persist(centroids)
     coarse = (
@@ -639,7 +639,7 @@ def two_level_assign(
 
     c_rows = sorted(coarse.collect(), key=lambda r: r["coarse_id"])
     if not c_rows:
-        centroids.unpersist(blocking=False)
+        release(centroids)
         return vecs.limit(0).select(
             "vid", "v", F.lit(0).cast("long").alias("cid"), F.lit(0.0).alias("d2")
         )
@@ -706,15 +706,9 @@ def two_level_assign(
     out = _two_level_bucket_stage(
         probed, routing, vt, default_cid=int(c_rows[0]["coarse_id"])
     )
-    # release the centroid cache when the caller drops the result — the
-    # module's release-on-GC lifetime discipline (the returned lazy plan
-    # reads it through the routing join until then)
-    import weakref
-
-    from ..caching import _release_on_gc
-
-    weakref.finalize(out, _release_on_gc, centroids._jdf)
-    return out
+    # the returned lazy plan reads the centroid cache through the
+    # routing join: it holds the entry until the caller drops it
+    return hold(out, centroids)
 
 
 def _two_level_bucket_stage(

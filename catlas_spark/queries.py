@@ -19,7 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .caching import is_materializing, maybe_persist
+from .caching import is_materializing, maybe_persist, run_builder
 from .session import AUTOBROADCAST_BYTES
 from .operators.dedup import MINHASH_P, minhash_coeffs
 from .operators.relational import (
@@ -222,20 +222,20 @@ def _wrap_plan_cached(name: str, fn: QueryFn) -> QueryFn:
         # lazy-mode plan would be cached for later NORMAL callers —
         # bypass the cache entirely there (neither read nor write).
         if not _plan_cache_enabled() or not is_materializing():
-            return fn(spark, sf_dir)
+            return run_builder(fn, spark, sf_dir)
         key = (spark.sparkContext.applicationId, sf_dir, name)
         df = _PLAN_CACHE.get(key)
         if df is not None:
             return df
         state = _PLAN_LAZY.get(name)
         if state is False:
-            return fn(spark, sf_dir)
+            return run_builder(fn, spark, sf_dir)
         # Build under the laziness guard (the confs were just reset, so
         # the conf delta observed is fn's own, not a prior query's leak)
         jobs_before = _n_jobs(spark)
         caches_before = _n_cache_entries(spark)
         conf_before = [spark.conf.get(k, None) for k in _GUARD_CONFS]
-        df = fn(spark, sf_dir)
+        df = run_builder(fn, spark, sf_dir)
         lazy = (
             _n_jobs(spark) == jobs_before
             and _n_cache_entries(spark) == caches_before
@@ -2671,9 +2671,9 @@ def q_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(rem + F.ceil((F.col("rnk") - cut) / max(base, 1)))
         .cast("long")
     )
-    # no keep_alive needed: ranked_by_range pins via localCheckpoint
-    # (ContextCleaner-freed, no release-on-GC finalizer) — keep_alive is
-    # only for frames derived from materialize_and_release outputs
+    # no caching.hold needed: ranked_by_range pins via localCheckpoint
+    # (ContextCleaner-freed, no cache entry) — hold is only for frames
+    # derived from materialize_and_release outputs
     return (
         ranked.select("o_totalprice", q.alias("q"))
         .groupBy("q")
@@ -3067,9 +3067,9 @@ def q_token_zipf_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked, totals = ranked_by_range(
         counts, [F.col("n").desc(), "tok"], cum_cols=("n",)
     )
-    # no keep_alive needed: ranked_by_range pins via localCheckpoint
-    # (ContextCleaner-freed, no release-on-GC finalizer) — keep_alive is
-    # only for frames derived from materialize_and_release outputs
+    # no caching.hold needed: ranked_by_range pins via localCheckpoint
+    # (ContextCleaner-freed, no cache entry) — hold is only for frames
+    # derived from materialize_and_release outputs
     return (
         ranked.filter(F.col("rnk") <= 100)
         .select(
@@ -6523,13 +6523,12 @@ def q_triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("x", "y")
     )
     out = triangle_participation(pairs)
-    # keep_alive: the select returns a NEW wrapper; without the tie the
-    # operator output's finalizer unpersists its just-counted cache at
-    # function return and the caller's action recomputes the whole
-    # pipeline (caching.keep_alive)
-    from .caching import keep_alive
+    # the select returns a NEW wrapper: it holds the operator output's
+    # cache entry, or the entry is released when `out` dies at function
+    # return and the caller's action recomputes the whole pipeline
+    from .caching import hold
 
-    return keep_alive(
+    return hold(
         out.select(F.col("node").alias("part"), F.col("n_triangles").cast("long")),
         out,
     )

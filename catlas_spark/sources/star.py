@@ -39,12 +39,6 @@ def load_star(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, Da
     return {t: load_table(spark, t, sf_dir) for t in STAR_TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every star table as a temp view (for the SQL API)."""
-    for t in STAR_TABLES:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)
-
-
 def load_pickled_dataframe(spark: SparkSession, path: str) -> DataFrame:
     """S7 pickled-pandas-DataFrame scan (reference
     `catlas/parity/parity_utils.py:281-287`, `bin/optimize_frame.py:56-58`:

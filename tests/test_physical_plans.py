@@ -474,15 +474,16 @@ def test_lazy_plans_registers_no_cache_entries(spark, sf_dir):
 def test_keep_alive_prevents_premature_cache_release(spark):
     """r8: a frame DERIVED from a materialize_and_release output must
     not lose the materialized cache when the operator output's local
-    name dies — without keep_alive the weakref finalizer unpersists the
-    just-counted cache at function return and the caller's action
-    silently recomputes the whole pipeline (caught at the 100x triangle
-    stress: ten extra jobs re-running the 60M-row pair build)."""
+    name dies — unless the derived frame holds the entry
+    (caching.hold), the entry is released at function return and the
+    caller's action silently recomputes the whole pipeline (caught at
+    the 100x triangle stress: ten extra jobs re-running the 60M-row
+    pair build)."""
     import gc
 
     from pyspark.sql import functions as F
 
-    from catlas_spark.caching import keep_alive, materialize_and_release
+    from catlas_spark.caching import hold, materialize_and_release
 
     cm = spark._jsparkSession.sharedState().cacheManager()
 
@@ -494,9 +495,9 @@ def test_keep_alive_prevents_premature_cache_release(spark):
             big.groupBy("k").agg(F.sum("v").alias("s"))
         )
         derived = out.select("k", (F.col("s") * 2).alias("s2"))
-        return keep_alive(derived, out) if tie else derived
+        return hold(derived, out) if tie else derived
 
-    # untied: the finalizer fires once the operator-local wrapper dies
+    # untied: released once the operator-local wrapper, its only holder, dies
     d = make_derived(tie=False)
     gc.collect()
     assert cm.isEmpty(), "expected the untied cache to be released on GC"
@@ -505,11 +506,105 @@ def test_keep_alive_prevents_premature_cache_release(spark):
     # tied: the cache must survive until the DERIVED frame dies
     d = make_derived(tie=True)
     gc.collect()
-    assert not cm.isEmpty(), "keep_alive failed: cache released early"
+    assert not cm.isEmpty(), "hold failed: cache released early"
     d.count()  # served from the surviving cache
     del d
     gc.collect()
     assert cm.isEmpty(), "cache must still release once the derived frame dies"
+
+
+def test_rerun_while_holding_the_previous_result_keeps_its_cache(spark, sf_dir):
+    """A caller that holds a query's result, re-runs the query and then
+    drops the OLD frame: both results share one CacheManager entry (the
+    CacheManager matches by canonicalized plan), and dropping the old
+    holder must not uncache the new result — its write is one job over
+    the cached output, not a recompute of the whole pipeline."""
+    import gc
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    fn = Q.queries()["dedup_minhash_lsh"]
+    df = fn(spark, sf_dir)
+    df = fn(spark, sf_dir)  # rebinding drops the older result
+    gc.collect()
+    jobs = Q._n_jobs(spark)
+    df.write.format("noop").mode("overwrite").save()
+    assert Q._n_jobs(spark) - jobs == 1
+    assert "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    del df
+    gc.collect()
+    assert cm.isEmpty(), "the entry must go with its last holder"
+
+
+def test_releasing_an_intermediate_keeps_a_held_entry(spark):
+    """A held materialize_and_release output survives a LATER
+    materialization that persists the same plan as an intermediate and
+    releases it: the release is a no-op while a holder is alive."""
+    import gc
+
+    from pyspark.sql import functions as F
+
+    from catlas_spark.caching import materialize_and_release, maybe_persist
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+
+    def sums():
+        return (
+            spark.range(0, 10_000)
+            .select((F.col("id") % 13).alias("k"), F.col("id").alias("v"))
+            .groupBy("k")
+            .agg(F.sum("v").alias("s"))
+        )
+
+    held = materialize_and_release(sums())
+    rows = sorted(held.collect())
+    inter = maybe_persist(sums())
+    other = materialize_and_release(inter.filter(F.col("k") < 5), inter)
+    del inter, other
+    gc.collect()
+    assert cm.lookupCachedData(held._jdf).isDefined(), "held entry was released"
+    assert sorted(held.collect()) == rows
+    assert "InMemoryTableScan" in held._jdf.queryExecution().executedPlan().toString()
+    del held
+    gc.collect()
+    assert cm.isEmpty()
+
+
+@pytest.mark.parametrize("fails_at", ["build", "action"])
+def test_builder_raising_mid_build_leaves_no_cache_or_conf(
+    spark, sf_dir, monkeypatch, fails_at
+):
+    """A registry builder whose operator raises after its maybe_persist
+    — while building the plan, or in its materializing action — leaves
+    no CacheManager entry behind, and the next registry query runs under
+    its own profile with the baseline confs restored."""
+    from pyspark.sql import functions as F
+
+    import catlas_spark.operators.dedup as D
+    from catlas_spark.session import AUTOBROADCAST_BYTES
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    monkeypatch.setattr(Q, "_PLAN_CACHE", {})
+    monkeypatch.setattr(Q, "_PLAN_LAZY", {})
+    profile = Q._execution_profile(spark, sf_dir)
+
+    def failing_verify(a, b):
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        if fails_at == "build":
+            raise RuntimeError("verify failed")
+        return F.raise_error(F.lit("verify failed"))
+
+    monkeypatch.setattr(D, "_hashed_jaccard", failing_verify)
+    with pytest.raises(Exception, match="verify failed"):
+        Q.queries()["dedup_minhash_lsh"](spark, sf_dir)
+    assert cm.isEmpty(), "a failed build left a cache entry behind"
+    Q.queries()["pricing_summary"](spark, sf_dir)
+    assert {k: spark.conf.get(k) for k in profile} == profile
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(
+        AUTOBROADCAST_BYTES
+    )
 
 
 def test_materialize_and_release_releases_on_error(spark):
@@ -533,6 +628,70 @@ def test_materialize_and_release_releases_on_error(spark):
     with pytest.raises(Exception, match="boom"):
         materialize_and_release(bad, upstream)
     assert jcache.isEmpty(), "error path must unpersist output AND caches"
+
+
+# Two single-core executors: the pinned frame's first task wave puts one
+# block on each, so losing executor "0" loses part of every pinned layout.
+_EXECUTOR_LOSS_SCRIPT = """
+import json, os, sys, time
+from pyspark.sql import SparkSession
+from catlas_spark.caching import pin
+
+spark = (
+    SparkSession.builder.master("local-cluster[2,1,1024]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.ui.showConsoleProgress", "false")
+    .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+    .getOrCreate()
+)
+sc = spark.sparkContext._jsc.sc()
+
+def wait_for(n_blockmanagers):  # executors plus the driver's
+    deadline = time.time() + 120
+    while sc.getExecutorMemoryStatus().size() != n_blockmanagers:
+        assert time.time() < deadline, "executors did not come up / go away"
+        time.sleep(0.2)
+
+def rows(df):
+    try:
+        return list(df.selectExpr("count(*)", "sum(v)").collect()[0])
+    except Exception:
+        return "raised"
+
+wait_for(3)
+df = spark.range(0, 10000, numPartitions=8).selectExpr("id", "id * 3 AS v")
+local = pin(df)
+os.environ["SPARK_GRAFT_CHECKPOINT_DIR"] = sys.argv[1]
+reliable = pin(df)
+sc.killExecutor("0")
+wait_for(2)
+print(json.dumps({"local": rows(local), "reliable": rows(reliable)}))
+spark.stop()
+"""
+
+
+def test_pin_survives_or_fails_loudly_on_executor_loss(tmp_path):
+    """Executor loss under ``pin``: a localCheckpoint (the default) loses
+    the dead executor's blocks and the next action RAISES; a reliable
+    checkpoint (SPARK_GRAFT_CHECKPOINT_DIR) returns the correct rows.
+    Neither returns wrong rows: pinned layouts must not change placement
+    between passes, so a silent answer from lost blocks is ruled out."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CHECKPOINT_DIR"}
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, env.get("PYTHONPATH")]))
+    proc = subprocess.run(
+        [sys.executable, "-c", _EXECUTOR_LOSS_SCRIPT, str(tmp_path / "ckpt")],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    want = [10000, 3 * sum(range(10000))]
+    assert got == {"local": "raised", "reliable": want}
 
 
 def test_rle_udtf_tokenization_matches_oracle_on_fringed_text():

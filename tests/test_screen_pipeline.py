@@ -381,9 +381,15 @@ def test_aqe_splits_skewed_join_partitions(spark, sf_dir):
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
+            "spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.enabled",
         )
     }
     try:
+        # the join's own width and AQE, not whatever a prior test left
+        # set: with 2 reducers no partition can reach 2x the median
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set(
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB"
