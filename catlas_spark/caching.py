@@ -29,7 +29,7 @@ The returned frame explains as an InMemoryTableScan; tooling that needs
 the REAL lazy plan (the plan-regression sweep, the PLANS.md generator)
 wraps its calls in :func:`lazy_plans`, where materialization is a no-op.
 Nothing here sets execution confs: the materializing actions run under
-the caller's profile (for registry queries, set once at their entry).
+the frame's own session (for registry queries, its profile's session).
 """
 
 from __future__ import annotations

@@ -322,8 +322,8 @@ def minhash_lsh_pairs(
     # materialize the (pairs-sized, small) verified output so the
     # signature cache releases NOW instead of accumulating across a
     # many-query session (caching.py; no-op under lazy_plans). The
-    # physical profile it runs under is the caller's: registry queries
-    # get one per query at their entry (queries.SMALL_INPUT_BYTES).
+    # physical profile it runs under is its input's session's: registry
+    # queries build on their profile's (queries.SMALL_INPUT_BYTES).
     return materialize_and_release(out, sig)
 
 

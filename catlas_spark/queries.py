@@ -146,32 +146,43 @@ def _ordered() -> dict[str, tuple[QueryFn, str | None]]:
 # (a) count Spark jobs submitted — any fn that eagerly computes
 # (persist+count materialization, stats collects, streaming runs)
 # launches jobs and is permanently excluded, so its work can never
-# be skipped on a later pass; (b) snapshot the plan-shaping confs — a fn
-# that overrides them (bloom_pruned_join) is excluded because its
-# physical plan depends on confs that _session_tune restores between
-# queries; and (c) count CacheManager entries — a fn that registers a
-# persist without materializing is excluded (clearCache between passes
-# would strip the registration out from under the cached plan).
-# tests/test_registry.py locks all three exclusion paths.
+# be skipped on a later pass; (b) snapshot the plan-shaping confs of the
+# session the fn was handed — that session is its profile's, shared by
+# every query with the same profile, so a conf the fn writes there would
+# outlive the query: the call raises, naming the query, and the session
+# is dropped so no later query is handed it (a query that needs other
+# confs declares them and builds on their own session, as
+# bloom_pruned_join does); and (c) count CacheManager entries — a fn
+# that registers a persist without materializing is excluded
+# (clearCache between passes would strip the registration out from
+# under the cached plan). Keys include the session, so a cached plan
+# never crosses profiles. tests/test_registry.py locks all three paths.
 # SPARK_GRAFT_PLAN_CACHE=0 disables the cache entirely (A/B lever).
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_PLAN_CACHE: dict[tuple[str, str, str, SparkSession], DataFrame] = {}
 _PLAN_LAZY: dict[str, bool] = {}
 
-# Execution profile: ONE per query, set at its registry entry (the
-# first statement of wrapped() below, on every path) by _session_tune.
-# Evidence: the total size of the input directory — known before any
-# builder runs (eager builders act INSIDE the build) and an upper bound
-# on every query's input, which a cross join's output estimate is not.
-# Below SMALL_INPUT_BYTES: AQE off (its per-exchange re-planning adds a
-# job per query stage, pure cost on a few-MB input) and a shuffle width
-# of at most SMALL_INPUT_PARTITIONS, never wider than the baseline.
-# Otherwise, and under lazy_plans (explain tooling sees the scale
-# shape), the baseline: AQE on, one shuffle partition per core. The
-# profile stays set through the caller's final action (run outside our
-# code) until the next query's entry resets it.
+# Execution profile: ONE per query, picked at its registry entry (the
+# first statement of wrapped() below, on every path) by
+# _execution_profile. Evidence: the total size of the input directory —
+# known before any builder runs (eager builders act INSIDE the build)
+# and an upper bound on every query's input, which a cross join's output
+# estimate is not. Below SMALL_INPUT_BYTES: AQE off (its per-exchange
+# re-planning adds a job per query stage, pure cost on a few-MB input)
+# and a shuffle width of at most SMALL_INPUT_PARTITIONS, never wider
+# than the baseline. Otherwise, and under lazy_plans (explain tooling
+# sees the scale shape), the baseline: AQE on, one shuffle partition
+# per core.
+# The profile is a session: a child of the caller's (spark.newSession():
+# same SparkContext and CacheManager, its own confs, temp views and
+# functions), created once per application and profile with the
+# baseline confs plus the profile (_profile_session), and handed to the
+# builder. Every frame the builder returns plans and runs under its
+# profile, through the caller's final action too, and no registry call
+# writes the caller's session.
 SMALL_INPUT_BYTES = 64 * 1024 * 1024
 SMALL_INPUT_PARTITIONS = 8
 _INPUT_BYTES: dict[tuple[str, str], int] = {}
+_SESSIONS: dict[tuple[str, frozenset], SparkSession] = {}
 
 _GUARD_CONFS = (
     "spark.sql.autoBroadcastJoinThreshold",
@@ -214,34 +225,41 @@ def _wrap_plan_cached(name: str, fn: QueryFn) -> QueryFn:
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the query's one execution profile, on every path below; it
-        # also restores the baseline confs a prior builder overrode
-        _session_tune(spark, sf_dir)
+        # the query's one execution profile, on every path below
+        spark = _profile_session(spark, _execution_profile(spark, sf_dir))
         # Inside lazy_plans (explain-only tooling) every materializer is
         # a no-op, so an EAGER builder would read as lazy and its
         # lazy-mode plan would be cached for later NORMAL callers —
         # bypass the cache entirely there (neither read nor write).
         if not _plan_cache_enabled() or not is_materializing():
             return run_builder(fn, spark, sf_dir)
-        key = (spark.sparkContext.applicationId, sf_dir, name)
+        key = (spark.sparkContext.applicationId, sf_dir, name, spark)
         df = _PLAN_CACHE.get(key)
         if df is not None:
             return df
         state = _PLAN_LAZY.get(name)
         if state is False:
             return run_builder(fn, spark, sf_dir)
-        # Build under the laziness guard (the confs were just reset, so
-        # the conf delta observed is fn's own, not a prior query's leak)
         jobs_before = _n_jobs(spark)
         caches_before = _n_cache_entries(spark)
         conf_before = [spark.conf.get(k, None) for k in _GUARD_CONFS]
-        df = run_builder(fn, spark, sf_dir)
-        lazy = (
-            _n_jobs(spark) == jobs_before
-            and _n_cache_entries(spark) == caches_before
-            and conf_before == [spark.conf.get(k, None) for k in _GUARD_CONFS]
-        )
-        if lazy:
+        try:
+            df = run_builder(fn, spark, sf_dir)
+        finally:
+            wrote = [
+                k
+                for k, v in zip(_GUARD_CONFS, conf_before)
+                if spark.conf.get(k, None) != v
+            ]
+            if wrote:
+                for k in [k for k, v in _SESSIONS.items() if v is spark]:
+                    del _SESSIONS[k]
+        if wrote:
+            raise RuntimeError(
+                f"registry query {name!r} wrote {wrote} on its shared profile "
+                "session; declare the confs it needs on a session of its own"
+            )
+        if _n_jobs(spark) == jobs_before and _n_cache_entries(spark) == caches_before:
             _PLAN_LAZY[name] = True
             _remember(_PLAN_CACHE, key, df)
         else:
@@ -270,21 +288,22 @@ def oracle_sql() -> dict[str, str]:
 # listing + footer schema read); a 171-query suite touching ~1.7 tables
 # per query pays ~25 s per pass re-deriving metadata that never changes.
 # Real engines put this in a metastore; here a dict keyed by
-# (applicationId, sf_dir, table) holds the immutable lazy scan plan.
-# Caches METADATA ONLY (lazy plan + file index) — never rows, never
-# results — so bench passes still execute the full compute. Keyed by
-# appId so a new session never sees another session's plans; static
-# testdata assumption documented (a changed directory needs a new key
-# or process, same as any metastore cache).
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# (applicationId, sf_dir, table, session) holds the immutable lazy scan
+# plan. Caches METADATA ONLY (lazy plan + file index) — never rows,
+# never results — so bench passes still execute the full compute. Keyed
+# by appId so a new application never sees another one's plans, and by
+# session so a table read for one profile never joins into another's
+# plan; static testdata assumption documented (a changed directory needs
+# a new key or process, same as any metastore cache).
+_TABLE_CACHE: dict[tuple[str, str, str, SparkSession], DataFrame] = {}
 
 
 def _remember(memo: dict, key: tuple, value):
-    """``memo[key] = value`` for the per-session memos (_TABLE_CACHE,
-    _PLAN_CACHE, _INPUT_BYTES), whose keys start with the applicationId.
-    Entries of other sessions are evicted first: they hold py4j
-    references into stopped JVMs and would accumulate forever in a
-    process that cycles sessions."""
+    """``memo[key] = value`` for the per-application memos (_TABLE_CACHE,
+    _PLAN_CACHE, _INPUT_BYTES, _SESSIONS), whose keys start with the
+    applicationId. Entries of other applications are evicted first: they
+    hold py4j references into stopped JVMs and would accumulate forever
+    in a process that cycles sessions."""
     for k in [k for k in memo if k[0] != key[0]]:
         del memo[k]
     memo[key] = value
@@ -337,14 +356,25 @@ def _input_bytes(spark: SparkSession, sf_dir: str) -> int:
 
 
 def _execution_profile(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """The AQE and shuffle-width confs a registry query over ``sf_dir``
-    runs under (see SMALL_INPUT_BYTES); the baseline under lazy_plans."""
+    """The confs a registry query over ``sf_dir`` runs under: the baseline
+    — small single-file tables split across cores, UTC so timestamp
+    formatting matches the (naive) DuckDB oracle, the engine's broadcast
+    threshold, Spark's default bloom scan-size threshold, and NANOS
+    events read as bigint (see _events) — plus AQE and the shuffle width
+    (see SMALL_INPUT_BYTES); the baseline width under lazy_plans."""
     # baseline width: one per core (the driver's default 200 is sized
     # for a cluster)
     cores = spark.sparkContext.defaultParallelism
     width = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores))
     small = is_materializing() and _input_bytes(spark, sf_dir) < SMALL_INPUT_BYTES
     return {
+        "spark.sql.files.maxPartitionBytes": os.environ.get(
+            "SPARK_GRAFT_SPLIT_BYTES", str(2 * 1024 * 1024)
+        ),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.autoBroadcastJoinThreshold": str(AUTOBROADCAST_BYTES),
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.adaptive.enabled": str(not small).lower(),
         "spark.sql.shuffle.partitions": str(
             min(width, SMALL_INPUT_PARTITIONS) if small else width
@@ -352,45 +382,24 @@ def _execution_profile(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     }
 
 
-def _session_tune(spark: SparkSession, sf_dir: str) -> None:
-    """Apply the baseline confs and the query's execution profile (see
-    SMALL_INPUT_BYTES); called once per query, at its registry entry.
-
-    All runtime-settable and cheap, so applied unconditionally: split
-    small single-file tables across cores, and pin UTC so timestamp
-    formatting matches the (naive) DuckDB oracle."""
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes",
-        os.environ.get("SPARK_GRAFT_SPLIT_BYTES", str(2 * 1024 * 1024)),
-    )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    for k, v in _execution_profile(spark, sf_dir).items():
-        spark.conf.set(k, v)
-    # restore the per-query conf overrides: queries that demonstrate
-    # shuffle-join-only optimizations (runtime bloom filter) lower these
-    # for their own plan; resetting here scopes each override to one
-    # query, events-only queries included. The broadcast threshold
-    # restores to whatever session.AUTOBROADCAST_BYTES says (currently
-    # Spark's 10MB default) — restoring to the CONSTANT, not a hardcoded
-    # literal, keeps the session tuning live if that constant is ever
-    # retuned. The bloom scan-size threshold restores to Spark's 10GB
-    # default (otherwise it leaks at 1KB, injecting runtime bloom
-    # filters into every later shuffle-join plan).
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(AUTOBROADCAST_BYTES))
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "10GB",
-    )
-    # events NANOS flavor support: physical planning (where hadoopConf is
-    # captured) happens at EXECUTION for a lazy plan, which with the plan
-    # cache can be long after _events() built it — so the conf must be
-    # part of the restored baseline, not only set inside _events()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+def _profile_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """The session of ``spark``'s application that runs under ``confs``:
+    a child session (see SMALL_INPUT_BYTES), created once per
+    application and set of confs. A builder must read every table from the
+    session it builds on: a join plans under its left-hand frame's
+    session."""
+    key = (spark.sparkContext.applicationId, frozenset(confs.items()))
+    session = _SESSIONS.get(key)
+    if session is None:
+        session = spark.newSession()
+        for k, v in confs.items():
+            session.conf.set(k, v)
+        _remember(_SESSIONS, key, session)
+    return session
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
+    key = (spark.sparkContext.applicationId, sf_dir, name, spark)
     df = _TABLE_CACHE.get(key)
     if df is None:
         df = _remember(_TABLE_CACHE, key, spark.read.parquet(f"{sf_dir}/{name}.parquet"))
@@ -402,13 +411,12 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     column (session pinned UTC) regardless of the physical flavor the driver
     parquet uses. Observed flavors across rounds: TIMESTAMP(MICROS, NTZ)
     (current testdata), TIMESTAMP(NANOS) (reads as bigint under
-    ``nanosAsLong``), and plain TIMESTAMP. Do NOT assume one flavor — it has
+    ``nanosAsLong``, which every profile session sets), and plain
+    TIMESTAMP. Do NOT assume one flavor — it has
     changed between rounds before."""
     from catlas_spark.sources.events_io import normalize_ts, probe_ts_flavor
 
-    # harmless for micros files; lets a NANOS file read as bigint instead of failing
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, sf_dir, "events__normalized")
+    key = (spark.sparkContext.applicationId, sf_dir, "events__normalized", spark)
     ev = _TABLE_CACHE.get(key)
     if ev is None:
         # unit decided ONCE PER FILE from the parquet logical type (footer
@@ -2960,17 +2968,22 @@ def q_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe is pushed into the lineitem scan, so non-matching rows die
     BEFORE the join shuffle (Catalyst InjectRuntimeFilter). At 100 TB
     both sides exceed the broadcast threshold and this is the default
-    plan; at bench scale the threshold is lowered for THIS query only
-    (the next registry query's entry restores it) to exercise the
-    shuffle-join path.
+    plan; at bench scale the thresholds are lowered to exercise the
+    shuffle-join path. The overrides are this query's declared conf
+    set: the profile plus three confs, resolved to a session of its own,
+    on which every table below is read and the frame plans and runs.
     Plan assertion lives in tests/test_physical_plans.py."""
+    spark = _profile_session(
+        spark,
+        {
+            **_execution_profile(spark, sf_dir),
+            "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    )
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 450000)
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1KB"
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(F.col("l_returnflag").alias("flag"))
@@ -6562,8 +6575,8 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-round z comparison is bit-identical across engines because both
     compute the same IEEE expression."""
     # _events, not _t: the raw scan would bypass the ts-flavor probe and
-    # crash outright on a NANOS-flavor events file (a flavor that HAS
-    # shipped in earlier rounds) before nanosAsLong is set
+    # read a NANOS-flavor events file (a flavor that HAS shipped in
+    # earlier rounds) as a bare bigint ts
     e = _events(spark, sf_dir)
     med = e.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.5)).alias("med")

@@ -26,10 +26,10 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
 # The engine's broadcast threshold — ONE constant shared by the session
-# builder and queries._t()'s per-query-override restore, so the two can
-# never disagree (they did: the builder set 64MB but _t() restored the
-# hardcoded 10MB after the first call, making 64MB dead code — every
-# recorded bench pair ran at 10MB). Spark's default is kept because all
+# builder and the registry's profile sessions (queries._execution_profile),
+# so the two can never disagree (they did: the builder set 64MB but the
+# registry restored a hardcoded 10MB after the first call, making 64MB
+# dead code — every recorded bench pair ran at 10MB). Spark's default is kept because all
 # plan evidence was gathered under it; dimension joins broadcast via
 # explicit hints regardless. Tune per deployment at cluster scale.
 AUTOBROADCAST_BYTES = 10 * 1024 * 1024

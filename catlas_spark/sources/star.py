@@ -57,15 +57,6 @@ def load_pickled_dataframe(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
-def load_binary_files(spark: SparkSession, path_glob: str) -> DataFrame:
-    """S6 analog (trajectory-file scan, bin/process_trajectories_for_
-    validation.py:50-57): one row per file with (path, modificationTime,
-    length, content BinaryType) — the ingestion point for multimodal
-    payloads; decode runs as mapInPandas downstream
-    (catlas_spark.operators.multimodal.decode_features)."""
-    return spark.read.format("binaryFile").load(path_glob)
-
-
 def read_json_robust(
     spark: SparkSession,
     path: str,

@@ -305,22 +305,6 @@ def click_purchase_join(events: DataFrame, horizon: str = "1 hour") -> DataFrame
     )
 
 
-def write_stream_parquet(stream_df: DataFrame, out_dir: str, query_name: str):
-    """foreachBatch exactly-once-style parquet sink: each micro-batch is
-    appended under its epoch id (idempotent on retry because the batch id
-    names the output)."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 TYPE_CENSUS_SCHEMA = (
     "user_id long, n_events long, n_types long, top_type string"
 )

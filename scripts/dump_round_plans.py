@@ -12,10 +12,10 @@ and in a worktree checked out at the previous round's commit:
 
 Unlike dump_plans.py (PLANS.md excerpts, tree only), this keeps the
 numbered-operator detail section so PushedFilters / ReadSchema / join
-build sides are inspectable.  Each plan is explained under the execution
-profile the query runs with (AQE and shuffle width, chosen at its
-registry entry from the input size), named in the file's header,
-because that is the shape a normal call executes.
+build sides are inspectable.  Plans are built under lazy_plans, so each
+is explained under the session the registry built it on; the file's
+header names that session's AQE and shuffle-width confs, read back from
+the dumped frame itself.
 """
 
 from __future__ import annotations
@@ -60,16 +60,14 @@ def main() -> None:
             continue
         with lazy_plans():
             df = qs[name](spark, sf)
-        # lazy_plans keeps the scale profile; explain under the one a
-        # normal call of this query sets (a builder's own conf
-        # overrides stay in place, as they would at its execution)
-        profile = Q._execution_profile(spark, sf)
-        for k, v in profile.items():
-            spark.conf.set(k, v)
+        conf = df.sparkSession.conf
         header = (
             f"# {name} — {suffix} ({os.path.basename(sf)}, "
             "explain('formatted'); execution profile: "
-            + ", ".join(f"{k}={v}" for k, v in profile.items())
+            + ", ".join(
+                f"{k}={conf.get(k)}"
+                for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+            )
             + ")\n\n"
         )
         path = os.path.join(outdir, f"{name}_{suffix}.txt")

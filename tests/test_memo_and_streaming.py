@@ -287,19 +287,6 @@ def test_stream_stream_interval_join(spark, sf_dir, events_stream):
     assert got == expected and len(got) > 0
 
 
-def test_foreach_batch_parquet_sink(spark, tmp_path, events_stream):
-    from catlas_spark.streaming.events import tumbling_counts, write_stream_parquet
-
-    out = str(tmp_path / "stream_out")
-    q = write_stream_parquet(
-        tumbling_counts(events_stream).select("event_type", "n"), out, "fb_smoke"
-    )
-    q.awaitTermination()
-    back = spark.read.parquet(out)
-    assert back.count() > 0
-    assert set(back.columns) >= {"event_type", "n"}
-
-
 def test_memo_compact(spark, tmp_path):
     from pyspark.sql import functions as F
 

@@ -49,10 +49,6 @@ def _all_plans(spark, sf_dir) -> dict[str, str]:
                 dfs, ex.map(_explain_text, dfs.values())
             ):
                 _PLAN_TEXTS[name] = text
-    # the last-built query may have left a per-query conf override set
-    # (bloom_pruned_join's builder does); restore the baseline so the
-    # sweep cannot leak plan-shaping confs into later tests
-    Q._session_tune(spark, sf_dir)
     return _PLAN_TEXTS
 
 
@@ -577,34 +573,38 @@ def test_builder_raising_mid_build_leaves_no_cache_or_conf(
 ):
     """A registry builder whose operator raises after its maybe_persist
     — while building the plan, or in its materializing action — leaves
-    no CacheManager entry behind, and the next registry query runs under
-    its own profile with the baseline confs restored."""
+    no CacheManager entry behind, and a conf it wrote on its session does
+    not reach the next registry query, which runs under its own
+    profile."""
     from pyspark.sql import functions as F
 
     import catlas_spark.operators.dedup as D
-    from catlas_spark.session import AUTOBROADCAST_BYTES
 
     cm = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     monkeypatch.setattr(Q, "_PLAN_CACHE", {})
     monkeypatch.setattr(Q, "_PLAN_LAZY", {})
     profile = Q._execution_profile(spark, sf_dir)
+    sessions = []
+    real_pairs = D.minhash_lsh_pairs
+
+    def pairs(df, *args, **kwargs):
+        sessions.append(df.sparkSession)
+        return real_pairs(df, *args, **kwargs)
 
     def failing_verify(a, b):
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        sessions[-1].conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         if fails_at == "build":
             raise RuntimeError("verify failed")
         return F.raise_error(F.lit("verify failed"))
 
+    monkeypatch.setattr(D, "minhash_lsh_pairs", pairs)
     monkeypatch.setattr(D, "_hashed_jaccard", failing_verify)
     with pytest.raises(Exception, match="verify failed"):
         Q.queries()["dedup_minhash_lsh"](spark, sf_dir)
     assert cm.isEmpty(), "a failed build left a cache entry behind"
-    Q.queries()["pricing_summary"](spark, sf_dir)
-    assert {k: spark.conf.get(k) for k in profile} == profile
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(
-        AUTOBROADCAST_BYTES
-    )
+    df = Q.queries()["pricing_summary"](spark, sf_dir)
+    assert {k: df.sparkSession.conf.get(k) for k in profile} == profile
 
 
 def test_materialize_and_release_releases_on_error(spark):
@@ -736,19 +736,20 @@ def test_events_scan_restores_per_query_conf_overrides(spark, sf_dir):
     broadcast threshold nor the bloom scan-size threshold, so
     bloom_pruned_join's plan overrides leaked into whatever events query
     the LRU window placed after it (identical results, drifted timings —
-    invisible to the oracle gate). Every registry query's entry now
-    restores them, events-only queries included."""
+    invisible to the oracle gate). The overrides now live on
+    bloom_pruned_join's own session: the events-only query that follows
+    it runs under the baseline thresholds."""
     from catlas_spark import queries as Q
     from catlas_spark.session import AUTOBROADCAST_BYTES
 
-    Q.queries()["bloom_pruned_join"](spark, sf_dir)  # sets the overrides
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
-    Q.queries()["rolling_active_users"](spark, sf_dir)  # reads only events
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(
+    bloom = Q.queries()["bloom_pruned_join"](spark, sf_dir)
+    assert bloom.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
+    ev = Q.queries()["rolling_active_users"](spark, sf_dir)  # reads only events
+    assert ev.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(
         AUTOBROADCAST_BYTES
     )
     assert (
-        spark.conf.get(
+        ev.sparkSession.conf.get(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
         )
         == "10GB"

@@ -160,16 +160,25 @@ def test_plan_cache_excludes_eager_compute(spark, sf_dir, monkeypatch):
 
 
 def test_plan_cache_excludes_conf_setting_query(spark, sf_dir, monkeypatch):
-    """A query that overrides plan-shaping confs (bloom_pruned_join) must
-    not be cached: its physical plan depends on confs that _session_tune
-    restores between queries, so a cached plan would execute under the
-    wrong settings."""
+    """A builder that writes a plan-shaping conf on the session it was
+    handed would change every later query of that profile (the session
+    is shared): the call raises, naming the query, and the session is
+    never handed out again, so the next query runs under its profile."""
+    from catlas_spark.session import AUTOBROADCAST_BYTES
+
     Q = _fresh_plan_cache(monkeypatch)
-    fn = Q.queries()["bloom_pruned_join"]
-    fn(spark, sf_dir)
-    fn(spark, sf_dir)
-    assert Q._PLAN_LAZY["bloom_pruned_join"] is False
-    assert not any(k[2] == "bloom_pruned_join" for k in Q._PLAN_CACHE)
+
+    def conf_writer(session, sf_dir):
+        session.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        return session.read.parquet(f"{sf_dir}/region.parquet")
+
+    with pytest.raises(RuntimeError, match="__conf_writer__"):
+        Q._wrap_plan_cached("__conf_writer__", conf_writer)(spark, sf_dir)
+    assert not any(k[2] == "__conf_writer__" for k in Q._PLAN_CACHE)
+    df = Q.queries()["pricing_summary"](spark, sf_dir)
+    assert df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(
+        AUTOBROADCAST_BYTES
+    )
 
 
 def test_plan_cache_env_kill_switch(spark, sf_dir, monkeypatch):
@@ -204,11 +213,8 @@ def test_plan_cache_excludes_lazy_persist(spark, sf_dir, monkeypatch):
         spark.catalog.clearCache()
 
 
-_PROFILE_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-
-
-def _profile_confs(spark) -> dict[str, str]:
-    return {k: spark.conf.get(k) for k in _PROFILE_CONFS}
+def _confs(session, keys) -> dict[str, str]:
+    return {k: session.conf.get(k) for k in keys}
 
 
 def test_n_jobs_counts_past_the_retained_job_limit(spark):
@@ -259,7 +265,7 @@ def test_tiny_exec_profile_results_match_default(spark, sf_dir, monkeypatch):
         for label, limit in (("small", threshold), ("baseline", 0)):
             monkeypatch.setattr(Q, "SMALL_INPUT_BYTES", limit)
             df = fn(spark, sf_dir)
-            assert spark.conf.get("spark.sql.adaptive.enabled") == str(
+            assert df.sparkSession.conf.get("spark.sql.adaptive.enabled") == str(
                 label == "baseline"
             ).lower()
             rows[label] = sorted(map(tuple, df.collect()))
@@ -271,30 +277,25 @@ def test_tiny_exec_profile_results_match_default(spark, sf_dir, monkeypatch):
 
 
 def test_one_profile_per_query(spark, sf_dir, monkeypatch):
-    """Every registry query runs under ONE execution profile, set at its
-    registry entry: a lazy query's plan-cache miss and hit leave the
-    same confs; an eager builder's in-builder actions and its final
-    action see the same profile; and a builder that sets confs and then
-    raises does not leak them into the next registry query."""
+    """Every registry query runs under ONE execution profile, the
+    session its frame is built on: a lazy query's plan-cache miss and
+    hit carry the same profile; an eager builder's in-builder actions
+    and its final action run under the same profile; and a builder that
+    sets confs on its session and then raises does not leak them into
+    the next registry query."""
     import catlas_spark.operators.dedup as D
-    from catlas_spark.session import AUTOBROADCAST_BYTES
 
     Q = _fresh_plan_cache(monkeypatch)
     profile = Q._execution_profile(spark, sf_dir)
     # sf0.001 is far below the threshold: the small profile applies
     assert profile["spark.sql.adaptive.enabled"] == "false"
 
-    def scramble():  # the opposite of the profile, as a prior query might leave it
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
-
     # lazy query: miss (first sightings) and hit
     fn = Q.queries()["pricing_summary"]
     seen = []
     for _ in range(3):
-        scramble()
         df = fn(spark, sf_dir)
-        seen.append(_profile_confs(spark))
+        seen.append(_confs(df.sparkSession, profile))
     assert fn(spark, sf_dir) is df, "third call must be a plan-cache hit"
     assert seen == [profile] * 3
 
@@ -303,30 +304,115 @@ def test_one_profile_per_query(spark, sf_dir, monkeypatch):
     real = D.materialize_and_release
 
     def spy(out, *caches):
-        in_builder.append(_profile_confs(spark))
+        in_builder.append(_confs(out.sparkSession, profile))
         return real(out, *caches)
 
     monkeypatch.setattr(D, "materialize_and_release", spy)
-    scramble()
     df = Q.queries()["dedup_minhash_lsh"](spark, sf_dir)
     assert in_builder == [profile]
-    assert _profile_confs(spark) == profile  # what its final action sees
+    assert _confs(df.sparkSession, profile) == profile  # what its final action sees
     df.write.format("noop").mode("overwrite").save()
     del df
 
-    # a builder that overrides confs, then raises mid-build
-    def raiser(spark, sf_dir):
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        scramble()
+    # a builder that overrides confs on its session, then raises mid-build
+    def raiser(session, sf_dir):
+        session.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        session.conf.set("spark.sql.adaptive.enabled", "true")
+        session.conf.set("spark.sql.shuffle.partitions", "3")
         raise RuntimeError("mid-build failure")
 
-    with pytest.raises(RuntimeError):
+    with pytest.raises(RuntimeError, match="mid-build failure"):
         Q._wrap_plan_cached("__raiser__", raiser)(spark, sf_dir)
-    Q.queries()["pricing_summary"](spark, sf_dir)
-    assert _profile_confs(spark) == profile
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(
-        AUTOBROADCAST_BYTES
-    )
+    df = Q.queries()["pricing_summary"](spark, sf_dir)
+    assert _confs(df.sparkSession, profile) == profile
+
+
+# the caller's session holds values no profile uses
+_CALLER_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.shuffle.partitions": "3",
+    "spark.sql.session.timeZone": "America/New_York",
+    "spark.sql.autoBroadcastJoinThreshold": "1234567",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "5GB",
+    "spark.sql.legacy.parquet.nanosAsLong": "false",
+}
+
+
+def test_registry_calls_leave_the_caller_session_untouched(spark, sf_dir, monkeypatch):
+    """A registry call never writes the caller's session: after a
+    plan-cache miss and hit, an eager builder and its final action,
+    bloom_pruned_join, a builder that registers a temp view and a
+    temporary function, and a builder that raises, the caller's confs,
+    temp views and functions are what they were, and its own next join
+    still plans adaptively. Each returned frame's session carries the
+    query's profile."""
+    Q = _fresh_plan_cache(monkeypatch)
+    saved = {k: spark.conf.get(k, None) for k in _CALLER_CONFS}
+    try:
+        for k, v in _CALLER_CONFS.items():
+            spark.conf.set(k, v)
+        tables = sorted(t.name for t in spark.catalog.listTables())
+        functions = sorted(f.name for f in spark.catalog.listFunctions())
+        profile = Q._execution_profile(spark, sf_dir)
+        qs = Q.queries()
+
+        lazy = [qs["pricing_summary"](spark, sf_dir) for _ in range(3)]
+        assert lazy[2] is lazy[1], "the third call must be a plan-cache hit"
+        eager = qs["dedup_minhash_lsh"](spark, sf_dir)
+        eager.write.format("noop").mode("overwrite").save()
+        bloom = qs["bloom_pruned_join"](spark, sf_dir)
+        bloom.collect()
+        udf = qs["sql_scalar_udf"](spark, sf_dir)
+        udf.collect()
+
+        def raiser(session, sf_dir):
+            session.read.parquet(f"{sf_dir}/region.parquet").createOrReplaceTempView(
+                "raiser_view"
+            )
+            raise RuntimeError("mid-build failure")
+
+        with pytest.raises(RuntimeError, match="mid-build failure"):
+            Q._wrap_plan_cached("__raiser__", raiser)(spark, sf_dir)
+
+        assert _confs(spark, _CALLER_CONFS) == _CALLER_CONFS
+        assert sorted(t.name for t in spark.catalog.listTables()) == tables
+        assert sorted(f.name for f in spark.catalog.listFunctions()) == functions
+        join = spark.range(100).join(spark.range(100), "id")
+        plan = join._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("AdaptiveSparkPlan"), plan
+
+        for df in (*lazy, eager, udf):
+            assert _confs(df.sparkSession, profile) == profile
+        bloom_confs = {
+            **profile,
+            "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        }
+        assert _confs(bloom.sparkSession, bloom_confs) == bloom_confs
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_bloom_pruned_join_is_plan_cached(spark, sf_dir, monkeypatch):
+    """bloom_pruned_join's overrides live on its own session, so its
+    builder is pure plan construction: the second call is a plan-cache
+    hit, and the cached plan still carries the runtime bloom filter."""
+    import catlas_spark.queries as Q
+
+    Q.queries()["bloom_pruned_join"](spark, sf_dir)  # reads its tables once
+    Q = _fresh_plan_cache(monkeypatch)
+    fn = Q.queries()["bloom_pruned_join"]
+    df = fn(spark, sf_dir)
+    assert fn(spark, sf_dir) is df
+    assert Q._PLAN_LAZY["bloom_pruned_join"] is True
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "might_contain" in plan
+    assert "bloom_filter_agg" in plan
 
 
 def test_plan_cache_bypassed_under_lazy_plans(spark, sf_dir, monkeypatch):

@@ -206,15 +206,6 @@ def test_salted_agg_matches_plain(spark):
     assert got == plain
 
 
-def test_binary_file_scan(spark):
-    from catlas_spark.sources.star import load_binary_files
-
-    df = load_binary_files(spark, "/root/testdata/sf0.001/region.parquet")
-    rows = df.collect()
-    assert len(rows) == 1
-    assert rows[0].length > 0 and rows[0].content[:4] == b"PAR1"
-
-
 def test_connected_components_chain_and_islands(spark):
     from catlas_spark.operators.dedup import connected_components
 
