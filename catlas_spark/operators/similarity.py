@@ -361,7 +361,7 @@ def quantized_topk(
 
 def _seed_centroids(vecs: DataFrame, k: int) -> DataFrame:
     """Deterministic centroid init shared by `kmeans_lloyd`,
-    `semantic_dedup` and `build_ivf_index`: the k SMALLEST ids'
+    `semantic_dedup` and `two_level_assign`: the k SMALLEST ids'
     vectors (TakeOrdered, k rows — NOT ``filter(vid < k)``, which is
     empty for id spaces that do not cover [0, k) and silently yielded
     zero centroids, review round 6). NULL seed vectors stay in the
@@ -533,8 +533,8 @@ def two_level_assign(
     table stays a DataFrame end to end — only ``n_coarse`` coarse rows
     ever reach the driver, so k is unbounded.
 
-    Standard IVF two-level shape (same family as `ivf_search_pruned`,
-    applied to ASSIGNMENT):
+    Standard IVF two-level shape (coarse-quantizer probing, applied to
+    ASSIGNMENT):
 
     1. coarse centroids = the ``n_coarse`` smallest cids' vectors
        (`_seed_centroids` rule, deterministic);
@@ -560,8 +560,8 @@ def two_level_assign(
     ``probes < n_coarse`` the assignment is approximate in the standard
     IVF sense — a vector whose true nearest fine centroid routes to an
     unprobed bucket may assign one bucket over. Pick
-    ``n_coarse ~ sqrt(k)`` and ``probes`` by recall need, exactly as in
-    `ivf_search_pruned`. Default probes = n_coarse (exact).
+    ``n_coarse ~ sqrt(k)`` and ``probes`` by recall need, as in any IVF
+    search. Default probes = n_coarse (exact).
 
     Returns (vid, v, cid, d2) like the flat regimes.
     """
@@ -1092,99 +1092,6 @@ def semantic_dedup(
         F.col("vid").alias("vec_id"),
         F.col("cid").alias("cluster_id"),
         "n_cluster_members",
-    )
-
-
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 8,
-) -> None:
-    """Persist an IVF index: the corpus written hive-partitioned by
-    nearest-centroid id (`ivf_cluster=<cid>/`), centroids alongside.
-
-    This is the build-once-query-many production shape of `ann_ivf`:
-    the assignment cross join runs ONCE at build time, and every later
-    search prunes to `nprobe` partition DIRECTORIES at planning time —
-    at 100 TB a probe touches k_probe/k of the corpus bytes, with
-    partition pruning visible in the scan's PartitionFilters (asserted
-    in tests/test_ml.py). Centroid convention matches `ann_ivf` /
-    `semantic_dedup` (k smallest ids; training certified by
-    `kmeans_ivf_train` — swap in its output for learned centroids).
-    """
-    vecs = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    # the K SMALLEST ids (TakeOrdered, k rows), as documented — NOT
-    # filter(vid < k), which is empty for id spaces that do not cover
-    # [0, k) and silently yielded zero centroids (review round 6)
-    centroids = _seed_centroids(vecs, k)
-    # shared assignment helper (r7 review: this block was a verbatim
-    # copy of _jvm_assign that a future tie-break/snap fix would miss)
-    assigned = _jvm_assign(vecs, centroids).select(
-        "vid", "v", F.col("cid").alias("ivf_cluster")
-    )
-    assigned.write.mode("overwrite").partitionBy("ivf_cluster").parquet(
-        f"{path}/corpus"
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_search_pruned(
-    spark,
-    path: str,
-    query: list[float],
-    topk: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Query a persisted IVF index: rank centroids against the query
-    DRIVER-side (the centroid table is k rows by construction — the
-    same tiny-model-state pattern as kmeans centroid broadcast), then
-    scan ONLY the nprobe nearest partitions (an isin() on the hive
-    partition column prunes directories at planning time) and
-    exact-rerank by cosine inside them. Returns (vec_id, sim) top-k."""
-    from ..functions.vector import dot, norm
-
-    # a persisted centroid is a NON-candidate when it is NULL, has a
-    # NULL/NaN COMPONENT, or has the wrong length — the same never-wins
-    # classes the assignment regimes give such vectors (r7 review caught
-    # bare-NULL; r8 caught the component cases: (a-b)**2 with a=None is
-    # a driver TypeError, and zip() silently TRUNCATES a wrong-length
-    # centroid to a prefix distance instead of excluding it)
-    def _d2(c):
-        if len(c) != len(query) or any(
-            a is None or a != a for a in c
-        ):
-            return None
-        return sum((a - b) ** 2 for a, b in zip(c, query))
-
-    cents = []
-    for r in spark.read.parquet(f"{path}/centroids").collect():
-        if r["c"] is None:
-            continue
-        d2 = _d2(r["c"])
-        if d2 is not None:
-            cents.append((d2, r["cid"]))
-    ranked = sorted(cents)
-    probe = [int(cid) for _, cid in ranked[:nprobe]]
-    q = F.array(*[F.lit(float(x)) for x in query])
-    corpus = spark.read.parquet(f"{path}/corpus").filter(
-        F.col("ivf_cluster").isin(probe)
-    )
-    qn = sum(x * x for x in query) ** 0.5
-    return (
-        corpus.select(
-            F.col("vid").alias("vec_id"),
-            F.round(
-                F.try_divide(dot(F.col("v"), q), norm(F.col("v")) * F.lit(qn)), 4
-            ).alias(
-                "sim"
-            ),
-        )
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(topk)
     )
 
 

@@ -12,8 +12,6 @@ corpus, then an iterative loop whose working set is a few thousand rows.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -26,7 +24,7 @@ from pyspark.sql import functions as F
 # finishes in microseconds. At real-corpus scale the vocabulary exceeds
 # the cap and the distributed loop below is the regime that runs; both
 # regimes are forced + hash-compared by scripts/regime_gate.py.
-DRIVER_MAX_VOCAB = int(os.environ.get("SPARK_GRAFT_BPE_DRIVER_MAX_VOCAB", "65536"))
+DRIVER_MAX_VOCAB = 65536
 
 
 def _apply_merge(seg: DataFrame, a: str, b: str) -> DataFrame:

@@ -11,8 +11,6 @@ helpers:
 - ``spread_small_source``: a small parquet file arrives as ONE input
   split; fan it out before an expensive/exploding map (B2's goal — skew
   isolation — without literal 1-row partitions).
-- ``repartition_after_explode``: explode multiplies rows 10-1000x; give
-  the next shuffle-free stage enough partitions (B3).
 - ``salt`` + ``salted_agg``: shard a hot grouping key K ways so one
   giant group doesn't serialize a stage; aggregate per (key, salt) then
   re-aggregate per key (the classic two-phase combine; R7).
@@ -143,9 +141,8 @@ def ranked_by_range(
 
 # pre-aggregate iff (sketched) distinct values < this fraction of rows:
 # duplicate-heavy data shrinks under (group, value) counting, near-unique
-# data only pays an extra shuffle. ONE definition — grouped_exact_quantiles'
-# fused probe and the standalone decide_quantile_preagg share it, so the
-# regime rule cannot drift between the two (r8 review).
+# data only pays an extra shuffle. grouped_exact_quantiles' fused probe
+# reads it when pre_aggregate is None.
 PREAGG_DISTINCT_FRACTION = 0.5
 
 
@@ -166,20 +163,6 @@ def plan_size_bytes(df: DataFrame) -> int:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return 1 << 62
-
-
-def decide_quantile_preagg(df: DataFrame, value_col: str) -> bool:
-    """Standalone form of :func:`grouped_exact_quantiles`'s fused regime
-    probe, for callers that want the dispatch decision ahead of time and
-    then pass ``pre_aggregate=`` explicitly (the operator itself fuses
-    this aggregation into its boundary-probe job — it does NOT call this
-    function). One tiny aggregation job (HLL + count, map-side
-    combinable); the threshold is the shared PREAGG_DISTINCT_FRACTION."""
-    row = df.agg(
-        F.approx_count_distinct(value_col).alias("nd"),
-        F.count(F.lit(1)).alias("n"),
-    ).first()
-    return bool(row["n"]) and row["nd"] < PREAGG_DISTINCT_FRACTION * row["n"]
 
 
 def grouped_exact_quantiles(
@@ -522,14 +505,6 @@ def spread_small_source(df: DataFrame, multiplier: int = 1) -> DataFrame:
     return df.repartition(n)
 
 
-def repartition_after_explode(df: DataFrame, fanout: int, cap: int = 1000) -> DataFrame:
-    """Reference policy slabs→min(10·n_bulks, 1000)
-    (catlas/prediction_steps.py:245-247), generalized: partitions
-    proportional to expected fan-out, capped."""
-    n = min(max(df.sparkSession.sparkContext.defaultParallelism, fanout), cap)
-    return df.repartition(n)
-
-
 def salt(df: DataFrame, n_salts: int) -> DataFrame:
     """Add a deterministic salt shard in [0, n_salts) derived from the
     full row hash — splits hot groups without randomness (reruns get the
@@ -618,128 +593,3 @@ def salted_join(
         salted_fact.join(replicated_dim.hint("shuffle_hash"), cond, how)
         .drop(SALT_COL)
     )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-    path: str | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by the join key:
-    later equi-joins between tables bucketed the same way need NO
-    exchange — the shuffle is paid once at write time (the batch analog
-    of co-partitioned storage; reference B-ops have no equivalent
-    because Dask bags cannot persist partitioning)."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    if path:  # external table (avoids needing a writable warehouse dir)
-        writer = writer.option("path", path)
-    writer.saveAsTable(table_name)
-
-
-def write_range_clustered(
-    df: DataFrame,
-    path: str,
-    sort_col: str,
-    n_ranges: int = 4,
-    row_group_bytes: int | None = None,
-) -> None:
-    """Sort-on-write clustering for parquet row-group skipping (the
-    layer BELOW hive partition pruning and ABOVE bucketing in the
-    data-skipping stack): repartitionByRange gives each file a disjoint
-    key range, sortWithinPartitions makes every row group's min/max
-    footer stats narrow, so a later range filter overlaps only a few
-    row groups and the parquet reader skips the rest before any IO
-    beyond the footer. At 100 TB this is the difference between
-    scanning a whole 128 MB row group per file and touching one — the
-    write-side shuffle is paid once, every selective range scan
-    benefits (the same pay-at-write economics as ``write_bucketed``).
-
-    ``row_group_bytes`` maps to parquet.block.size; the default (None)
-    keeps parquet's production 128 MB groups — tests pass a tiny value
-    explicitly to get many groups out of small data.
-    """
-    writer = (
-        df.repartitionByRange(n_ranges, F.col(sort_col))
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-    )
-    if row_group_bytes is not None:
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    writer.parquet(path)
-
-
-def zorder_value(
-    x: Column, y: Column, x_bounds: tuple, y_bounds: tuple, bits: int = 16
-) -> Column:
-    """Morton (Z-order) key for two numeric columns: each coordinate is
-    quantized to ``bits`` levels over its [min, max] bounds and the bit
-    strings are interleaved — pure codegen bit arithmetic (2*bits
-    shift/mask terms), no UDF. Out-of-bounds values clamp to the edge
-    cells rather than corrupting neighbors' keys."""
-    top = (1 << bits) - 1
-
-    def quant(c: Column, lo, hi) -> Column:
-        if hi <= lo:
-            return F.lit(0).cast("long")
-        scaled = F.floor((c.cast("double") - F.lit(float(lo))) * (top / (hi - lo)))
-        return F.least(F.lit(top), F.greatest(F.lit(0), scaled)).cast("long")
-
-    qx, qy = quant(x, *x_bounds), quant(y, *y_bounds)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(qx, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        ).bitwiseOR(F.shiftleft(F.shiftright(qy, i).bitwiseAND(F.lit(1)), 2 * i))
-    return z
-
-
-def write_zorder_clustered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    bounds: tuple | None = None,
-    bits: int = 16,
-    n_ranges: int = 4,
-    row_group_bytes: int | None = None,
-) -> None:
-    """Space-filling-curve clustering on TWO columns — the 2-D member of
-    the data-skipping stack (`write_range_clustered` is the 1-D one; the
-    same layout discipline behind OPTIMIZE ZORDER in lakehouse table
-    formats). A 1-D sort gives narrow row-group footer stats on its sort
-    column only: filters on the second column overlap every group. The
-    Morton curve maps 2-D proximity to key proximity, so sorting by the
-    interleaved key gives every row group a small (x, y) RECTANGLE —
-    selective filters on x, on y, or on a box of both skip most groups
-    from footer stats alone, before any data IO. The curve key is
-    write-side only and never stored.
-
-    ``bounds`` = ((x_min, x_max), (y_min, y_max)) for the quantizer;
-    pass footer statistics (``sources.stats.parquet_column_bounds``)
-    when the frame comes off a parquet scan — planning-time, no job.
-    Omitted bounds cost ONE min/max aggregation over the input (at
-    100 TB prefer the footer path). Quantization only steers layout;
-    values are written untouched, so stale/loose bounds degrade
-    skipping, never correctness.
-    """
-    if bounds is None:
-        r = df.agg(
-            F.min(x_col), F.max(x_col), F.min(y_col), F.max(y_col)
-        ).first()
-        bounds = ((r[0], r[1]), (r[2], r[3]))
-    z = zorder_value(F.col(x_col), F.col(y_col), bounds[0], bounds[1], bits)
-    writer = (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_ranges, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-    )
-    if row_group_bytes is not None:
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    writer.parquet(path)

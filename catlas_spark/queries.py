@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .caching import is_materializing, maybe_persist, run_builder
-from .session import AUTOBROADCAST_BYTES
+from .session import AUTOBROADCAST_BYTES, SPLIT_BYTES
 from .operators.dedup import MINHASH_P, minhash_coeffs
 from .operators.relational import (
     best_within_relative_threshold,
@@ -364,13 +364,10 @@ def _execution_profile(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     (see SMALL_INPUT_BYTES); the baseline width under lazy_plans."""
     # baseline width: one per core (the driver's default 200 is sized
     # for a cluster)
-    cores = spark.sparkContext.defaultParallelism
-    width = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores))
+    width = spark.sparkContext.defaultParallelism
     small = is_materializing() and _input_bytes(spark, sf_dir) < SMALL_INPUT_BYTES
     return {
-        "spark.sql.files.maxPartitionBytes": os.environ.get(
-            "SPARK_GRAFT_SPLIT_BYTES", str(2 * 1024 * 1024)
-        ),
+        "spark.sql.files.maxPartitionBytes": str(SPLIT_BYTES),
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.autoBroadcastJoinThreshold": str(AUTOBROADCAST_BYTES),
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",

@@ -34,6 +34,12 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 # explicit hints regardless. Tune per deployment at cluster scale.
 AUTOBROADCAST_BYTES = 10 * 1024 * 1024
 
+# Scan split size, shared by the session builder and the registry's
+# profile sessions: the small benchmark files would each arrive as ONE
+# 128MB-default split, so the cap lets scans parallelize. Raise it per
+# deployment when inputs are many large files.
+SPLIT_BYTES = 2 * 1024 * 1024
+
 # Default driver heap: a quarter of physical RAM (the JVM's own default
 # share), capped. The JVM grows its heap lazily up to -Xmx, so a cap
 # above the machine's memory lets a long many-query session grow until
@@ -53,7 +59,6 @@ def get_spark(
     app_name: str = "catlas_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
@@ -105,21 +110,9 @@ def get_spark(
         # Measured on a 55-query warm subset: 40 s -> 22 s. On a real
         # cluster the same setting keeps long-lived drivers from
         # recompiling hot plan shapes.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "10000"),
-        )
-        # small benchmark files arrive as ONE 128MB-default split each —
-        # cap split size so scans parallelize; real deployments with many
-        # files should override back up via SPARK_GRAFT_SPLIT_BYTES
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_SPLIT_BYTES", str(2 * 1024 * 1024)),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "10000")
+        .config("spark.sql.files.maxPartitionBytes", str(SPLIT_BYTES))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -45,71 +45,3 @@ def snapshot_config(config: dict, out_dir: str) -> None:
 def console_preview(df: DataFrame, columns: list[str], n: int = 20) -> None:
     """K7: verbose console sink (catlas/prediction_steps.py:423-435)."""
     df.select(*columns).show(n, truncate=False)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 512 * 1024 * 1024,
-    min_files: int = 1,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ceil(total_bytes / target_file_bytes) files (floor ``min_files``).
-
-    The 100 TB operational problem this solves: a streaming sink or a
-    many-task write leaves thousands of KB-sized files per partition;
-    every later scan then pays one task + one open per file and the
-    NameNode/listing layer pays the metadata. Compaction is a pure
-    rewrite — read, coalesce to the target count, write to a temp dir,
-    atomically swap — so downstream plans see the same rows in fat,
-    row-group-aligned files. coalesce() (not repartition) keeps it
-    shuffle-free: each output task concatenates input splits.
-
-    Returns the number of files written. Content equality and file
-    count are asserted in tests/test_screen_pipeline.py.
-
-    Flat directories only: a hive-partitioned layout (path/k=v/...)
-    must be compacted per leaf directory, or the rewrite would both
-    flatten the partition structure and funnel the whole dataset
-    through ceil(total/target) tasks — the function refuses rather
-    than guessing. The swap is rename-aside (old → __old, new → path,
-    delete __old): a crash leaves either the original or the compacted
-    directory at a recoverable name, never a window with no data under
-    ``path`` — and a rerun SELF-RECOVERS: leftover ``__old`` with no
-    ``path`` (crash between the two renames) is renamed back before
-    compacting; stale ``__old``/``__compacting`` alongside an intact
-    ``path`` are removed (they are, respectively, an already-swapped
-    original and a partial rewrite).
-    """
-    import glob as _glob
-    import math
-    import shutil
-
-    tmp = path.rstrip("/") + "__compacting"
-    old = path.rstrip("/") + "__old"
-    # crash recovery from a prior interrupted run (see docstring)
-    if os.path.isdir(old) and not os.path.isdir(path):
-        os.rename(old, path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-
-    files = _glob.glob(os.path.join(path, "*.parquet"))
-    if not files:
-        sub = [d for d in _glob.glob(os.path.join(path, "*")) if os.path.isdir(d)]
-        raise ValueError(
-            f"compact_parquet: no top-level parquet files in {path}"
-            + (
-                f"; found partition dirs {sub[:3]} — compact each leaf directory"
-                if sub
-                else ""
-            )
-        )
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(min_files, math.ceil(total / target_file_bytes))
-    spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return len(_glob.glob(os.path.join(path, "*.parquet")))

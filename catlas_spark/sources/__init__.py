@@ -1,3 +1,1 @@
-from .star import STAR_TABLES, load_star, load_table
-
-__all__ = ["STAR_TABLES", "load_star", "load_table"]
+"""Scans: the star schema table names and the screen fixture generators."""

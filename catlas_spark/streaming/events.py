@@ -48,8 +48,16 @@ def read_event_stream(
     at stream construction (pyarrow, no data IO) and the schema + ``ts``
     normalization are derived from the file's actual logical type —
     NANOS, MICROS-NTZ, UTC-adjusted, and raw-int64 flavors all end as a
-    session-TZ TimestampType column under the pinned-UTC session, so
-    watermarks/windows see real event time (mirrors the batch _events).
+    session-TZ TimestampType column, so watermarks/windows see real
+    event time (mirrors the batch _events).
+
+    The stream reads under the session it is handed, whose confs it
+    never writes. ``spark.sql.session.timeZone`` must be UTC there: an
+    NTZ wall clock becomes an instant in the session time zone, and the
+    oracle reads it as UTC. ``spark.sql.legacy.parquet.nanosAsLong`` is
+    not needed: the explicit schema reads a NANOS file as bigint (only
+    schema inference, as in the batch ``_events``, needs it). Every
+    registry profile session (``queries._execution_profile``) sets both.
 
     The probe is construction-time ONLY: a source directory that starts
     EMPTY cannot be classified, and silently defaulting would read any
@@ -58,9 +66,6 @@ def read_event_stream(
     caller to pass ``flavor`` explicitly (one of the events_io TS_*
     constants, the normal production bootstrap where the writer's
     flavor is known)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # harmless for micros files; lets a NANOS file read as bigint instead of failing
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if flavor is None:
         from ..sources.events_io import _first_parquet_file
 
@@ -217,67 +222,6 @@ def dedup_stream(
     return events.dropDuplicates(keys or ["event_id"])
 
 
-USER_STATS_SCHEMA = "user_id long, n_events long, total_value double, max_value double"
-_USER_STATE_SCHEMA = "n long, total double, mx double"
-
-
-def _user_stats_update(key, pdfs, state):
-    """State-update body of :func:`stateful_user_stats` (module-level so
-    the unit test can drive it with a fake state handle).
-
-    -inf is the in-STATE sentinel for "no non-null value seen"; the
-    emitted max_value is NULL in that case, matching batch F.max
-    semantics (count(*) counts every row; sum/max skip nulls). The
-    batch max is guarded with notna: an all-null batch's pandas max()
-    is NaN, and ``max(mx, nan)`` only keeps ``mx`` by the accident of
-    comparison-argument order.
-    """
-    import pandas as pd
-
-    n, total, mx = (state.get if state.exists else (0, 0.0, float("-inf")))
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-        batch_mx = pdf["value"].max()
-        if pd.notna(batch_mx):
-            mx = max(mx, float(batch_mx))
-    state.update((n, total, mx))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            # mx == -inf <=> no non-null value ever seen, and F.sum skips
-            # exactly the rows F.max skips — so the batch-parity NULL
-            # (not pandas' skipna 0.0) applies to the total too (r8)
-            "total_value": [round(total, 4) if mx != float("-inf") else None],
-            "max_value": [round(mx, 4) if mx != float("-inf") else None],
-        }
-    )
-
-
-def stateful_user_stats(events: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState:
-    per-user running (count, total value, max value) maintained in the
-    state store across micro-batches — the pattern for operators the
-    built-in aggregations can't express (the reference has no streaming
-    counterpart; this is a new engine capability).
-
-    State is one fixed-size row per user; at scale the state store
-    partitions by user_id with the shuffle, and a timeout would evict
-    idle users (omitted here: the smoke source is finite).
-    """
-    update = _user_stats_update
-
-    src = events.withWatermark("ts", "2 hours") if events.isStreaming else events
-    return src.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=USER_STATS_SCHEMA,
-        stateStructType=_USER_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-
-
 def click_purchase_join(events: DataFrame, horizon: str = "1 hour") -> DataFrame:
     """Stream-stream interval join: each purchase matched to the same
     user's clicks within the preceding ``horizon`` (state bounded by
@@ -302,122 +246,6 @@ def click_purchase_join(events: DataFrame, horizon: str = "1 hour") -> DataFrame
     )
     return clicks.join(purchases, cond, "inner").select(
         "purchase_id", "click_id", F.col("p_user").alias("user_id")
-    )
-
-
-TYPE_CENSUS_SCHEMA = (
-    "user_id long, n_events long, n_types long, top_type string"
-)
-
-
-def user_type_census_tws(events: DataFrame) -> DataFrame:
-    """Per-user event-type census via ``transformWithStateInPandas`` —
-    Spark 4's arbitrary-stateful API (the successor surface to
-    `stateful_user_stats`'s applyInPandasWithState): a typed MapState
-    (event_type -> count) lives in the state store per user, updated
-    every micro-batch; the emitted row is the census AFTER the batch
-    (total events, distinct types, most-frequent type with
-    lexicographic tiebreak). Requires the RocksDB state store provider
-    (transformWithState is implemented against it); the caller/test
-    pins `spark.sql.streaming.stateStore.providerClass`. ALSO requires
-    `protobuf` (the TWS state-server wire protocol) — absent from this
-    container, so the parity test import-skips, same policy as the
-    matplotlib-gated parity PDF sink; the API usage itself is real.
-
-    MapState (vs a single packed ValueState) is the point: per-type
-    updates touch only the changed keys, so a user with a million
-    events and five types carries five counters, and state growth is
-    O(distinct types) — the right shape for an unbounded stream.
-    """
-    src = events.withWatermark("ts", "2 hours") if events.isStreaming else events
-    return src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TypeCensusProcessor(),
-        outputStructType=TYPE_CENSUS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class TypeCensusProcessor(StatefulProcessor):
-    """The census processor itself, module-level so its batch-update
-    logic is unit-testable against a fake MapState even though the full
-    streaming drive needs protobuf (see `user_type_census_tws`)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._counts = handle.getMapState("type_counts", "key string", "cnt long")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        for pdf in rows:
-            # value_counts() drops nulls — count null-typed events under
-            # an explicit sentinel key so they are neither silently
-            # excluded from the census nor able to crash the min() below
-            # on an all-null first batch
-            for t, c in pdf["event_type"].fillna("__null__").value_counts().items():
-                prev = (
-                    self._counts.getValue((t,))[0]
-                    if self._counts.containsKey((t,))
-                    else 0
-                )
-                self._counts.updateValue((t,), (prev + int(c),))
-        counts = {k[0]: v[0] for k, v in self._counts.iterator()}
-        if not counts:  # zero input rows for this key in this batch
-            return
-        total = sum(counts.values())
-        top = min((-(c), t) for t, c in counts.items())[1]
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [total],
-                "n_types": [len(counts)],
-                "top_type": [top],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def click_purchase_left_outer(events: DataFrame, horizon: str = "1 hour") -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every purchase appears —
-    joined to same-user clicks in the preceding ``horizon``, or with
-    NULL click columns once the watermark proves no matching click can
-    still arrive. The outer semantics are state-driven: an unmatched
-    purchase's NULL row is emitted only in a batch AFTER the watermark
-    passes its whole match window (purchase_ts), because until then a
-    matching click could legally arrive; purchases whose window never
-    expires before the stream ends are never emitted as NULL (tested —
-    the availableNow smoke path needs a trailing batch to flush them).
-    Batch mode on the same frame gives the plain left join, which
-    equals the streamed result exactly when every unmatched purchase's
-    window expired — the test's equality oracle."""
-    clicks = events.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    if events.isStreaming:
-        clicks = clicks.withWatermark("click_ts", "2 hours")
-        purchases = purchases.withWatermark("purchase_ts", "2 hours")
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}"))
-    )
-    return purchases.join(clicks, cond, "left_outer").select(
-        "purchase_id", F.col("p_user").alias("user_id"), "click_id"
     )
 
 

@@ -54,14 +54,13 @@ def test_probe_classifies_flavor(tmp_path, name):
 
 
 @pytest.mark.parametrize("name", sorted(FLAVORS))
-def test_batch_normalization_per_flavor(spark, tmp_path, name):
+def test_batch_normalization_per_flavor(event_confs, tmp_path, name):
     from pyspark.sql import functions as F
 
+    spark = event_confs
     ts_type, vals, _ = FLAVORS[name]
     f = str(tmp_path / "events.parquet")
     _write_events(f, ts_type, vals)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = events_io.normalize_ts(spark.read.parquet(f), events_io.probe_ts_flavor(f))
     assert dict(df.dtypes)["ts"] == "timestamp"
     got = {
@@ -72,9 +71,10 @@ def test_batch_normalization_per_flavor(spark, tmp_path, name):
 
 
 @pytest.mark.parametrize("name", sorted(FLAVORS))
-def test_stream_normalization_per_flavor(spark, tmp_path, name):
+def test_stream_normalization_per_flavor(event_confs, tmp_path, name):
     from catlas_spark.streaming.events import read_event_stream, run_batch_like_stream, tumbling_counts
 
+    spark = event_confs
     ts_type, vals, _ = FLAVORS[name]
     f = str(tmp_path / "events.parquet")
     _write_events(f, ts_type, vals)
@@ -82,6 +82,23 @@ def test_stream_normalization_per_flavor(spark, tmp_path, name):
     got = run_batch_like_stream(tumbling_counts(stream), f"flavor_{name}")
     rows = {(str(r.bucket_start), r.n) for r in got.collect()}
     assert rows == {(s, 1) for s in EXPECTED}
+
+
+def test_read_event_stream_leaves_session_confs_untouched(spark, sf_dir):
+    """The stream reads under the caller's session without writing it: a
+    session in America/New_York with nanosAsLong off reads back both
+    values after one read_event_stream call."""
+    from catlas_spark.streaming.events import read_event_stream
+
+    caller = {
+        "spark.sql.session.timeZone": "America/New_York",
+        "spark.sql.legacy.parquet.nanosAsLong": "false",
+    }
+    session = spark.newSession()
+    for k, v in caller.items():
+        session.conf.set(k, v)
+    read_event_stream(session, f"{sf_dir}/events*.parquet")
+    assert {k: session.conf.get(k) for k in caller} == caller
 
 
 def test_int64_unit_decided_per_file_not_per_row(tmp_path):

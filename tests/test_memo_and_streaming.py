@@ -127,8 +127,8 @@ def test_memoize_results_match_direct(spark, tmp_path):
 
 
 @pytest.fixture()
-def events_stream(spark, sf_dir):
-    return read_event_stream(spark, f"{sf_dir}/events*.parquet")
+def events_stream(event_confs, sf_dir):
+    return read_event_stream(event_confs, f"{sf_dir}/events*.parquet")
 
 
 def test_tumbling_counts_stream_matches_batch(spark, sf_dir, events_stream):
@@ -224,48 +224,6 @@ def test_memoized_inference_in_cascade(spark, tmp_path):
     assert plain == first
 
 
-def test_stateful_user_stats(spark, sf_dir, events_stream):
-    from pyspark.sql import functions as F
-
-    from catlas_spark.queries import _events
-    from catlas_spark.streaming.events import stateful_user_stats
-
-    q = (
-        stateful_user_stats(events_stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_stats_smoke")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # last update per user == batch ground truth
-    got = {
-        r.user_id: (r.n_events, r.total_value, r.max_value)
-        for r in spark.sql(
-            """SELECT * FROM (
-                 SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-                 FROM user_stats_smoke) WHERE rn = 1"""
-        ).collect()
-    }
-    expected = {
-        r.user_id: (r.n, round(r.total, 4), round(r.mx, 4))
-        for r in _events(spark, sf_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("value").alias("total"),
-            F.max("value").alias("mx"),
-        )
-        .collect()
-    }
-    assert set(got) == set(expected)
-    for u in got:
-        assert got[u][0] == expected[u][0]
-        assert abs(got[u][1] - expected[u][1]) < 1e-6
-        assert got[u][2] == expected[u][2]
-
-
 def test_stream_stream_interval_join(spark, sf_dir, events_stream):
     from catlas_spark.queries import _events
     from catlas_spark.streaming.events import click_purchase_join
@@ -334,7 +292,7 @@ def test_incremental_fingerprint_memo(spark, sf_dir, tmp_path):
     assert spark.read.parquet(table).count() == n1 + n_new
 
 
-def test_streaming_interval_join_mode(spark, sf_dir):
+def test_streaming_interval_join_mode(spark, sf_dir, event_confs):
     """run_batch_like_stream append mode drives a stream-stream join to
     completion and matches the batch interval join."""
     from catlas_spark.queries import _events
@@ -432,7 +390,7 @@ def test_streaming_watermark_drops_late_rows(spark, tmp_path):
     assert max(by_bucket["05:00"]) == 2
 
 
-def test_rocksdb_state_store_matches_default_provider(spark, sf_dir):
+def test_rocksdb_state_store_matches_default_provider(spark, sf_dir, event_confs):
     """The streaming surface on the RocksDB state store provider (the
     large-state production choice: state lives off-heap/on-disk instead
     of the default in-memory HDFS-backed map) must produce byte-for-byte
@@ -561,202 +519,6 @@ def test_streaming_incremental_ingest_with_memo(spark, tmp_path):
     assert spark.read.parquet(table).count() == 15
 
 
-def test_transform_with_state_type_census(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4 arbitrary-stateful API): the
-    per-user MapState census driven through a real streaming query on
-    the RocksDB provider must equal the batch ground truth; the LAST
-    update row per user is the final census.
-
-    Skips when `protobuf` is absent (the TWS state-server protocol
-    imports google.protobuf; not shipped in this container)."""
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    from catlas_spark.queries import _events
-    from catlas_spark.streaming.events import (
-        read_event_stream,
-        run_batch_like_stream,
-        user_type_census_tws,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_event_stream(spark, f"{sf_dir}/events*.parquet")
-        out = run_batch_like_stream(
-            user_type_census_tws(stream),
-            "tws_census_smoke",
-            output_mode="update",
-            state_partitions=8,
-        )
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    got = {
-        r.user_id: (r.n_events, r.n_types, r.top_type)
-        for r in spark.sql(
-            """SELECT * FROM (
-                 SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-                 FROM tws_census_smoke) WHERE rn = 1"""
-        ).collect()
-    }
-    ev = _events(spark, sf_dir)
-    counts = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("c"))
-    expected = {}
-    for r in counts.collect():
-        u = expected.setdefault(r.user_id, {})
-        # the processor counts null-typed events under "__null__"
-        u[r.event_type if r.event_type is not None else "__null__"] = r.c
-    expected = {
-        u: (
-            sum(d.values()),
-            len(d),
-            min((-c, t) for t, c in d.items())[1],
-        )
-        for u, d in expected.items()
-    }
-    assert got == expected and len(got) > 0
-
-
-def test_type_census_processor_logic_with_fake_state():
-    """The TWS processor's per-batch update logic, unit-tested against a
-    dict-backed fake MapState (the streaming drive itself needs
-    protobuf; the logic does not)."""
-    import pandas as pd
-
-    from catlas_spark.streaming.events import TypeCensusProcessor
-
-    class FakeMap:
-        def __init__(self):
-            self.d = {}
-
-        def containsKey(self, k):
-            return k in self.d
-
-        def getValue(self, k):
-            return self.d[k]
-
-        def updateValue(self, k, v):
-            self.d[k] = v
-
-        def iterator(self):
-            return iter(self.d.items())
-
-    p = TypeCensusProcessor()
-    p._counts = FakeMap()
-    b1 = pd.DataFrame({"event_type": ["click", "click", "view"]})
-    out1 = list(p.handleInputRows((7,), iter([b1]), None))[0]
-    assert out1.iloc[0].tolist() == [7, 3, 2, "click"]
-    # second micro-batch accumulates; tie broken lexicographically
-    b2 = pd.DataFrame({"event_type": ["view", "purchase"]})
-    out2 = list(p.handleInputRows((7,), iter([b2]), None))[0]
-    assert out2.iloc[0].tolist() == [7, 5, 3, "click"]
-    b3 = pd.DataFrame({"event_type": ["view", "purchase"]})
-    out3 = list(p.handleInputRows((7,), iter([b3]), None))[0]
-    # click=2 view=3 purchase=2 -> view wins
-    assert out3.iloc[0].tolist() == [7, 7, 3, "view"]
-    # null-typed events count under the sentinel instead of vanishing,
-    # and an all-null batch must not crash the top-type election
-    b4 = pd.DataFrame({"event_type": [None, None]})
-    out4 = list(p.handleInputRows((7,), iter([b4]), None))[0]
-    assert out4.iloc[0].tolist() == [7, 9, 4, "view"]
-    p2 = TypeCensusProcessor()
-    p2._counts = FakeMap()
-    out5 = list(p2.handleInputRows((8,), iter([b4]), None))[0]
-    assert out5.iloc[0].tolist() == [8, 2, 1, "__null__"]
-
-
-def test_stream_stream_left_outer_emits_expired_nulls(spark, tmp_path):
-    """LEFT OUTER stream-stream interval join: the matched purchase
-    emits its inner row immediately; the unmatched purchase emits its
-    NULL row only after a LATER batch runs with the watermark past its
-    match window (outer emission is state-expiry-driven, not
-    row-driven). With every window expired by stream end, the streamed
-    result equals the batch left join — asserted both ways."""
-    import os
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from catlas_spark.streaming.events import (
-        EVENTS_SCHEMA,
-        click_purchase_left_outer,
-    )
-
-    src = str(tmp_path / "louter_src")
-    os.makedirs(src)
-
-    def write_file(name, rows):
-        df = spark.createDataFrame(
-            rows,
-            "event_id long, ts string, user_id long, event_type string, value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        df.coalesce(1).write.parquet(f"{src}/{name}")
-        _time.sleep(1.1)
-
-    # batch 0: click 01:00; purchase 01:30 (matches); purchase 03:00
-    # (no click in [02:00, 03:00] — must surface as NULL eventually)
-    write_file(
-        "f1",
-        [
-            (1, "2024-01-01 01:00:00", 1, "click", 1.0, "{}"),
-            (2, "2024-01-01 01:30:00", 1, "purchase", 9.0, "{}"),
-            (3, "2024-01-01 03:00:00", 1, "purchase", 9.0, "{}"),
-        ],
-    )
-    # batch 1: pushes BOTH branch watermarks to 07:00 after it
-    # completes (the two withWatermark branches track their own max
-    # event time and the join uses the MIN — a click alone would leave
-    # the purchase branch's watermark at 01:00 forever)
-    write_file(
-        "f2",
-        [
-            (4, "2024-01-01 09:00:00", 2, "purchase", 9.0, "{}"),
-            (5, "2024-01-01 09:00:00", 3, "click", 1.0, "{}"),
-        ],
-    )
-    # batch 2: runs WITH watermark 07:00 -> flushes purchase 3's NULL row
-    write_file("f3", [(6, "2024-01-01 09:30:00", 3, "click", 1.0, "{}")])
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    q = (
-        click_purchase_left_outer(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("louter_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.purchase_id, r.click_id)
-        for r in spark.sql("SELECT * FROM louter_test").collect()
-    }
-    # purchase 4 (09:00) is unmatched too but its window never expires
-    # before the stream ends, so its NULL row is legitimately withheld
-    assert got == {(2, 1), (3, None)}
-
-    # the batch left join is the streamed result PLUS the unexpired
-    # unmatched purchase — the precise semantic gap between the two
-    batch = (
-        spark.read.schema(EVENTS_SCHEMA)
-        .parquet(f"{src}/*")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    got_batch = {
-        (r.purchase_id, r.click_id)
-        for r in click_purchase_left_outer(batch).collect()
-    }
-    assert got_batch == got | {(4, None)}
-
-
 def test_dedup_stream_business_key_across_batches(spark, tmp_path):
     """streaming_dedup_counts contract on a real multi-batch source:
     dedup by (user, type, hour-bucket) with the bucket watermarked and
@@ -868,45 +630,6 @@ def test_sharded_memoize_tolerates_empty_input(spark, tmp_path):
     )
     assert out.count() == 0
     assert set(out.columns) == {"x", "t", "r"}
-
-
-def test_stateful_user_stats_all_null_values_emit_null_max():
-    """A user whose every event has value=NULL must emit max_value=NULL
-    AND total_value=NULL (batch parity: F.sum over only NULLs is NULL,
-    not pandas' skipna 0.0 — F.sum skips exactly the rows F.max skips,
-    r8 review); n_events still counts rows. Drives the REAL update body
-    with a fake state handle (the applyInPandasWithState wire needs a
-    stream; the logic does not)."""
-    import pandas as pd
-
-    from catlas_spark.streaming.events import _user_stats_update
-
-    class FakeState:
-        exists = False
-
-        def update(self, t):
-            self.stored = t
-
-    st = FakeState()
-    pdf = pd.DataFrame({"value": [None, None]}, dtype="float64")
-    [out] = list(_user_stats_update((7,), [pdf], st))
-    assert out["n_events"].iloc[0] == 2
-    assert out["total_value"].iloc[0] is None
-    assert out["max_value"].iloc[0] is None
-    assert st.stored == (2, 0.0, float("-inf"))
-
-    # a later batch with a real value upgrades the state and the output
-    class FakeState2:
-        exists = True
-        get = st.stored
-
-        def update(self, t):
-            self.stored = t
-
-    st2 = FakeState2()
-    [out2] = list(_user_stats_update((7,), [pd.DataFrame({"value": [3.5]})], st2))
-    assert out2["max_value"].iloc[0] == 3.5
-    assert st2.stored == (3, 3.5, 3.5)
 
 
 def test_memo_key_schema_marker(spark, tmp_path):

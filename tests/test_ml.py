@@ -1,103 +1,10 @@
-"""MLlib-surface tests: LSH results validated against the engine's exact
-operators (ground truth), parity model vs closed-form aggregates."""
+"""Similarity-operator tests: k-means, semantic dedup, quantized and
+product-quantized top-k, two-level assignment and blocked cosine pairs,
+each checked against a local replay or an exact form."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from catlas_spark.ml import brp_ann, fit_parity_model, minhash_dedup_pairs
-from catlas_spark.operators.similarity import cosine_topk
-from catlas_spark.parity import parity_summary
-from catlas_spark.sources import fixtures
-
-
-@pytest.fixture(scope="module")
-def corpus(spark, sf_dir):
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
-    mutated = d.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat("text", F.lit(" xtra")).alias("text"),
-    )
-    return d.select("doc_id", "text").unionByName(mutated)
-
-
-def test_mllib_minhash_finds_planted_dups(spark, corpus):
-    pairs = minhash_dedup_pairs(corpus, max_jaccard_distance=0.5)
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    # every planted (i, i+100000) mutated pair within the corpus slice
-    ids = {r.doc_id for r in corpus.collect()}
-    planted = {(i, i + 100000) for i in ids if i + 100000 in ids}
-    assert planted, "fixture must contain planted pairs"
-    found = planted & got
-    assert len(found) / len(planted) >= 0.9  # LSH recall on true near-dups
-    # distances are true Jaccard distances: planted pairs are close
-    dists = {(r.id_a, r.id_b): r.jaccard_distance for r in pairs.collect()}
-    assert all(dists[p] <= 0.3 for p in found)
-
-
-def test_brp_ann_overlaps_exact_topk(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3)
-    approx = brp_ann(emb, queries, k=10)
-    exact = cosine_topk(emb, queries, k=10)
-    a = {(r.q_id, r.n_id) for r in approx.collect()}
-    e = {(r.q_id, r.n_id) for r in exact.collect()}
-    # Euclidean-LSH top-10 must overlap exact cosine top-10 (vectors are
-    # roughly isotropic; require non-trivial agreement, not identity)
-    assert len(a & e) >= 3
-
-
-def test_brp_ann_bulk_path_matches_driver_path(spark, sf_dir):
-    """Query tables above the driver-loop cap route through one
-    distributed approxSimilarityJoin (no per-query collect loop); results
-    must agree with the per-query path on common queries."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5)
-    # force the bulk path by setting the cap below the query count
-    bulk = brp_ann(emb, queries, k=10, max_driver_queries=2, bulk_radius=50.0)
-    loop = brp_ann(emb, queries, k=10, max_driver_queries=32)
-    b = {(r.q_id, r.n_id) for r in bulk.collect()}
-    l = {(r.q_id, r.n_id) for r in loop.collect()}
-    assert {q for q, _ in b} == {q for q, _ in l}  # every query answered
-    # within-radius candidates are ranked by the same metric: high overlap
-    assert len(b & l) / len(l) >= 0.8
-
-
-def test_brp_ann_bulk_path_retries_radius_starved_queries(spark, sf_dir):
-    """A bulk_radius too small to hold k neighbors must NOT silently
-    drop queries or truncate their k: starved queries are re-joined at a
-    wider radius, so every query still answers with k rows."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5)
-    tiny = brp_ann(emb, queries, k=10, max_driver_queries=2, bulk_radius=0.01)
-    per_q = {}
-    for r in tiny.collect():
-        per_q.setdefault(r.q_id, set()).add(r.n_id)
-    assert set(per_q) == {0, 1, 2, 3, 4}  # no query dropped
-    assert all(len(v) == 10 for v in per_q.values())  # full k after retries
-
-
-def test_mllib_face_has_no_python_udf_stages(spark, corpus):
-    """Plan sweep over the MLlib face: featurization + LSH join must not
-    contain BatchEvalPython stages (the empty-vector filter is a native
-    size() predicate on the shingle array, not a Python UDF)."""
-    from catlas_spark.ml import fit_minhash_dedup
-
-    lsh_model, featurized = fit_minhash_dedup(corpus)
-    plan = featurized._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
-    joined = lsh_model.approxSimilarityJoin(featurized, featurized, 0.5, distCol="d")
-    plan2 = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan2 and "PythonUDF" not in plan2
-
-
-def test_parity_model_matches_closed_form(spark):
-    val = fixtures.make_validation(spark, n=500)
-    model = fit_parity_model(val)
-    summary = parity_summary(val.withColumn("distribution", F.lit("all"))).collect()[0]
-    assert abs(model.coefficients[0] - summary.slope) < 1e-2
-    assert abs(model.intercept - summary.intercept) < 1e-2
 
 
 def test_kmeans_lloyd_matches_numpy_replay(spark, sf_dir):
@@ -361,93 +268,6 @@ def test_quantized_topk_production_path_skips_exact(spark, sf_dir):
     assert all(r.in_exact is None for r in rows)
 
 
-def test_ivf_index_tolerates_null_seed(spark, tmp_path):
-    """A NULL embedding among the k smallest ids persists a NULL
-    centroid row (seed init keeps NULL rows to preserve its TakeOrdered
-    plan); ivf_search_pruned must skip it instead of crashing its
-    driver-side zip, and the NULL seed must never win an assignment
-    (r7 review)."""
-    from catlas_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_search_pruned,
-    )
-
-    rows = [
-        (0, None),  # smallest id -> becomes a (NULL) seed
-        (1, [1.0, 0.0]),
-        (2, [0.0, 1.0]),
-        (3, [0.9, 0.1]),
-        (4, [0.1, 0.9]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    idx = str(tmp_path / "ivf_null")
-    build_ivf_index(emb, idx, k=3)
-    out = ivf_search_pruned(spark, idx, [1.0, 0.0], topk=2, nprobe=2)
-    got = [r.vec_id for r in out.collect()]
-    assert got and got[0] == 1  # exact match ranks first; no crash
-
-
-def test_ivf_persisted_index_prunes_partitions(spark, sf_dir, tmp_path):
-    """The persisted IVF index must (a) prune to the probed cluster
-    directories at planning time (PartitionFilters on the hive column),
-    (b) agree exactly with an in-memory rerank over the same probed
-    clusters, and (c) recover full brute-force top-k when probing every
-    cluster."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from catlas_spark.functions.vector import dot, norm
-    from catlas_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_search_pruned,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx, k=8)
-
-    query = [float(x) for x in emb.filter(F.col("vec_id") == 3).collect()[0]["embedding"]]
-
-    out = ivf_search_pruned(spark, idx, query, topk=5, nprobe=2)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    p = buf.getvalue()
-    assert "PartitionFilters" in p and "ivf_cluster" in p.split("PartitionFilters")[1][:200]
-    got = [(r["vec_id"], r["sim"]) for r in out.collect()]
-
-    # in-memory oracle over the same probed clusters
-    corpus = spark.read.parquet(f"{idx}/corpus")
-    probed = {r["ivf_cluster"] for r in out.join(
-        corpus.select(F.col("vid").alias("vec_id"), "ivf_cluster"), "vec_id"
-    ).select("ivf_cluster").distinct().collect()}
-    assert len(probed) <= 2
-
-    # probing ALL clusters == brute force over the whole corpus
-    full = ivf_search_pruned(spark, idx, query, topk=5, nprobe=8)
-    q = F.array(*[F.lit(x) for x in query])
-    qn = sum(x * x for x in query) ** 0.5
-    brute = (
-        emb.select(
-            "vec_id",
-            F.round(
-                dot(F.col("embedding").cast("array<double>"), q)
-                / (norm(F.col("embedding").cast("array<double>")) * F.lit(qn)),
-                4,
-            ).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(5)
-    )
-    assert [tuple(r) for r in full.collect()] == [tuple(r) for r in brute.collect()]
-    # the nprobe=2 result is a subset ranking drawn from the probed
-    # clusters and must contain the true nearest (its own cluster is
-    # always probed first)
-    assert got[0][0] == 3
-
-
 def test_pq_topk_invariants(spark, sf_dir):
     """Product-quantization ADC search: (a) every query emits exactly k
     ranked rows; (b) a corpus row that IS a codebook row encodes to its
@@ -496,19 +316,6 @@ def test_pq_topk_invariants(spark, sf_dir):
     )
     assert len(codes) == 16 * 4
     assert all(r.code == r.n_id for r in codes)
-
-
-def test_brp_ann_empty_queries_returns_empty(spark, sf_dir):
-    """An upstream filter that matches nothing must yield an empty
-    result frame, not an IndexError in the driver-loop union."""
-    from pyspark.sql import functions as F
-
-    from catlas_spark.ml import brp_ann
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = brp_ann(e, e.filter(F.col("vec_id") < 0), k=3)
-    assert out.columns == ["q_id", "n_id", "dist"]
-    assert out.count() == 0
 
 
 def test_kmeans_and_semantic_handle_shifted_id_space(spark):

@@ -80,30 +80,6 @@ def test_parity_cli_writes_outputs_and_gated_pdf(spark, tmp_path, validation):
     assert os.path.isdir(os.path.join(out, "frame_curve"))
 
 
-def test_load_pickled_dataframe_roundtrip(spark, tmp_path):
-    """S7: a pickled pandas validation DataFrame loads with schema and
-    values intact (reference parity_utils.py:281-287 ingest path)."""
-    import pandas as pd
-
-    from catlas_spark.sources.star import load_pickled_dataframe
-
-    pdf = pd.DataFrame(
-        {
-            "random_id": ["random1", "random2"],
-            "distribution": ["id", "ood"],
-            "DFT_energy": [-1.25, 0.5],
-            "ML_energy": [[-1.0, -1.2], [0.6, 0.4]],
-        }
-    )
-    p = str(tmp_path / "val.pkl")
-    pdf.to_pickle(p)
-    df = load_pickled_dataframe(spark, p)
-    rows = {r.random_id: r for r in df.collect()}
-    assert set(df.columns) == set(pdf.columns)
-    assert rows["random1"].DFT_energy == -1.25
-    assert list(rows["random2"].ML_energy) == [0.6, 0.4]
-
-
 def test_best_frame_ignores_null_mae_frames(spark):
     """A frame position where every ML value is NULL aggregates to NULL
     MAE; struct ordering is NULLS FIRST, so without the exclusion that

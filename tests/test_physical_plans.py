@@ -146,47 +146,6 @@ def test_udtf_is_arrow_enabled(spark, sf_dir):
         assert "BatchEvalPython" not in p
 
 
-def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
-    """Tables bucketed on the join key must join with zero Exchange
-    operators (the write-once-shuffle-never pattern for 100 TB joins)."""
-    from catlas_spark.partitioning import write_bucketed
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    write_bucketed(li, "li_bucketed", "l_orderkey", 8, path=str(tmp_path / "li"))
-    write_bucketed(orders, "o_bucketed", "o_orderkey", 8, path=str(tmp_path / "o"))
-
-    import contextlib
-    import io
-
-    # disable broadcast BEFORE building the plan: the point at scale is
-    # sort-merge over co-located buckets with zero exchanges. Restore
-    # the PREVIOUS value, not a literal — the old hardcoded 64MB restore
-    # silently leaked a non-default broadcast threshold into every later
-    # test in the shared session (r7 tautology hunt).
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("li_bucketed").join(
-            spark.table("o_bucketed"),
-            spark.table("li_bucketed").l_orderkey
-            == spark.table("o_bucketed").o_orderkey,
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        p = buf.getvalue()
-        assert "SortMergeJoin" in p
-        assert "Exchange hashpartitioning" not in p
-        # results correct
-        assert (
-            joined.count()
-            == li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-
-
 def test_bloom_filter_join_pruning(spark, sf_dir):
     # the selective orders predicate must inject a might_contain() probe
     # into the lineitem side (Catalyst InjectRuntimeFilter)
@@ -305,149 +264,6 @@ def test_broadcast_threshold_sensitivity(spark, sf_dir):
     assert "BroadcastHashJoin" in p_bc and "SortMergeJoin" not in p_bc
     assert "SortMergeJoin" in p_smj and "BroadcastHashJoin" not in p_smj
     assert rows_bc == rows_smj and rows_bc
-
-
-def test_range_clustered_write_enables_rowgroup_skipping(spark, sf_dir, tmp_path):
-    """Sort-on-write clustering must produce parquet row groups whose
-    min/max footer stats let a range filter skip most groups, where the
-    same data written hash-shuffled cannot skip any — the row-group
-    layer of the data-skipping stack (partition pruning and bucketing
-    are covered elsewhere). Spark's reader skips off exactly these
-    stats when the filter is pushed (asserted on the plan)."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-    from pyspark.sql import functions as F
-
-    from catlas_spark.partitioning import write_range_clustered
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_shipdate", "l_quantity"
-    )
-    lo, hi = [
-        r[0]
-        for r in li.selectExpr("min(l_shipdate)").collect()
-        + li.selectExpr("max(l_shipdate)").collect()
-    ]
-    span = (hi - lo).days
-    f_lo, f_hi = lo, lo + __import__("datetime").timedelta(days=max(1, span // 20))
-
-    clustered = str(tmp_path / "clustered")
-    shuffled = str(tmp_path / "shuffled")
-    write_range_clustered(li, clustered, "l_shipdate", n_ranges=2, row_group_bytes=8 * 1024)
-    (
-        li.repartition(2, "l_orderkey")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(8 * 1024))
-        .parquet(shuffled)
-    )
-
-    def matching_groups(path):
-        total = hit = 0
-        for f in _glob.glob(f"{path}/*.parquet"):
-            meta = _pq.ParquetFile(f).metadata
-            idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}[
-                "l_shipdate"
-            ]
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(idx).statistics
-                total += 1
-                if st.min <= f_hi and st.max >= f_lo:
-                    hit += 1
-        return total, hit
-
-    c_total, c_hit = matching_groups(clustered)
-    s_total, s_hit = matching_groups(shuffled)
-    assert c_total >= 8 and s_total >= 8  # enough groups for the claim
-    assert s_hit == s_total  # hash layout: every group overlaps the range
-    assert c_hit <= max(1, c_total // 4)  # clustered: the vast majority skip
-
-    # the filter actually reaches the scan (reader applies group skipping)
-    scan = spark.read.parquet(clustered).filter(
-        (F.col("l_shipdate") >= F.lit(f_lo)) & (F.col("l_shipdate") <= F.lit(f_hi))
-    )
-    import io as _io
-    from contextlib import redirect_stdout as _rs
-
-    buf = _io.StringIO()
-    with _rs(buf):
-        scan.explain("formatted")
-    assert "PushedFilters: [" in buf.getvalue()
-    assert "GreaterThanOrEqual(l_shipdate" in buf.getvalue()
-    # and both layouts agree on the answer
-    assert (
-        scan.count()
-        == spark.read.parquet(shuffled)
-        .filter((F.col("l_shipdate") >= F.lit(f_lo)) & (F.col("l_shipdate") <= F.lit(f_hi)))
-        .count()
-    )
-
-
-def test_zorder_write_skips_on_both_dimensions(spark, sf_dir, tmp_path):
-    """Morton-curve clustering vs 1-D sort, the defining contrast: the
-    1-D layout skips row groups only for filters on its own sort column
-    (a second-column filter overlaps EVERY group), while the z-ordered
-    layout gives each group a small (x, y) rectangle so selective
-    filters on EITHER column skip most groups from footer stats alone.
-    Measured on this data: zorder ~24%/32% of groups overlap the x/y
-    eighth-range filters; x-sort is 100% on the y filter."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-    from pyspark.sql import functions as F
-
-    from catlas_spark.partitioning import write_range_clustered, write_zorder_clustered
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    b = li.agg(
-        F.min("l_orderkey"), F.max("l_orderkey"), F.min("l_partkey"), F.max("l_partkey")
-    ).first()
-    zp, xp = str(tmp_path / "zorder"), str(tmp_path / "xsort")
-    write_zorder_clustered(
-        li, zp, "l_orderkey", "l_partkey",
-        bounds=((b[0], b[1]), (b[2], b[3])), n_ranges=2, row_group_bytes=4 * 1024,
-    )
-    write_range_clustered(li, xp, "l_orderkey", n_ranges=2, row_group_bytes=4 * 1024)
-
-    def hits(path, col, lo, hi):
-        tot = hit = 0
-        for f in _glob.glob(f"{path}/*.parquet"):
-            meta = _pq.ParquetFile(f).metadata
-            idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}[col]
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(idx).statistics
-                tot += 1
-                if st.min <= hi and st.max >= lo:
-                    hit += 1
-        return hit, tot
-
-    x_rng = (b[0], b[0] + (b[1] - b[0]) // 8)
-    y_rng = (b[2], b[2] + (b[3] - b[2]) // 8)
-    zx, zx_tot = hits(zp, "l_orderkey", *x_rng)
-    zy, zy_tot = hits(zp, "l_partkey", *y_rng)
-    sx, sx_tot = hits(xp, "l_orderkey", *x_rng)
-    sy, sy_tot = hits(xp, "l_partkey", *y_rng)
-    assert zx_tot >= 20 and sx_tot >= 20  # enough groups for the claim
-    # 1-D layout: the y filter overlaps essentially every group. Not an
-    # exact equality (r8 flake): row_group_bytes=4KB makes tiny groups,
-    # and a small TAIL group of n random partkeys misses the eighth-range
-    # with probability 0.875^n — repartitionByRange's per-RDD sampling
-    # seed shifts group sizes between sessions, so one stray skipped
-    # group is luck, not layout. The contrast claim (≈100% vs <=50%)
-    # survives a 5% allowance.
-    assert sy >= sy_tot - max(1, sy_tot // 20), (sy, sy_tot)
-    assert sx <= sx_tot // 4  # ...but is best-in-class on its own column
-    assert zx <= zx_tot // 2 and zy <= zy_tot // 2  # zorder skips on BOTH
-    # layout never changes answers: box-filter counts agree
-    box = (
-        (F.col("l_orderkey").between(*x_rng)) & (F.col("l_partkey").between(*y_rng))
-    )
-    assert (
-        spark.read.parquet(zp).filter(box).count()
-        == spark.read.parquet(xp).filter(box).count()
-    )
 
 
 def test_lazy_plans_registers_no_cache_entries(spark, sf_dir):

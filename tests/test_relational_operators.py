@@ -676,19 +676,28 @@ def test_cdc_chunks_shift_robust_where_fixed_chunks_fail(spark):
 
 
 def test_quantile_preagg_regime_probe(spark):
-    """The pre-aggregation dispatch must pick counting for
+    """grouped_exact_quantiles' own pre-aggregation dispatch (its fused
+    probe, ``pre_aggregate=None``) must pick counting for
     duplicate-heavy values and the raw-row path for near-unique ones —
     and both paths must produce identical quantiles either way."""
     from pyspark.sql import functions as F
-
-    from catlas_spark.partitioning import decide_quantile_preagg
 
     from catlas_spark.partitioning import grouped_exact_quantiles
 
     dup_heavy = spark.range(10_000).select((F.col("id") % 20).cast("double").alias("v"))
     near_unique = spark.range(10_000).select((F.col("id") * 1.0).alias("v"))
-    assert decide_quantile_preagg(dup_heavy, "v") is True
-    assert decide_quantile_preagg(near_unique, "v") is False
+
+    def pre_aggregated(frame) -> bool:
+        # direct_max_bytes=0: past the small-input regime, which has no
+        # pre-aggregation dispatch; the pre-aggregation is the
+        # (group, value) count that feeds the per-cell stats
+        out = grouped_exact_quantiles(
+            frame.withColumn("g", F.lit(1)), "g", "v", [0.5], direct_max_bytes=0
+        )
+        return "count(1) AS __cnt" in out._jdf.queryExecution().analyzed().toString()
+
+    assert pre_aggregated(dup_heavy) is True
+    assert pre_aggregated(near_unique) is False
     # and the docstring's actual claim (r8 tautology hunt: it was never
     # tested HERE): both regimes produce identical quantiles on the
     # same data, forced past the dispatch

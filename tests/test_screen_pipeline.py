@@ -294,37 +294,6 @@ def test_reference_ci_shaped_configs(spark, tmp_path, monkeypatch, cfg_path):
     assert out.count() > 0
 
 
-def test_compact_parquet_small_files(spark, sf_dir, tmp_path):
-    """32 tiny files compact into a handful, shuffle-free, with content
-    unchanged (the streaming-sink small-file cleanup)."""
-    from pyspark.sql import functions as F
-
-    from catlas_spark.sinks import compact_parquet
-
-    out = str(tmp_path / "frag")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.repartition(32).write.parquet(out)
-    import glob
-
-    assert len(glob.glob(f"{out}/*.parquet")) == 32
-    # double sums are order-sensitive; compare exact invariants instead
-    probe = lambda df: tuple(
-        df.agg(
-            F.count(F.lit(1)),
-            F.sum("l_quantity"),  # integer-valued, exact in double
-            F.min("l_extendedprice"),
-            F.max("l_extendedprice"),
-            F.count_distinct("l_orderkey", "l_linenumber"),
-        ).collect()[0]
-    )
-    before = probe(li)
-
-    n = compact_parquet(spark, out, target_file_bytes=4 * 1024 * 1024)
-    assert n == len(glob.glob(f"{out}/*.parquet"))
-    assert n <= 4  # tiny table -> a handful of fat files
-    assert probe(spark.read.parquet(out)) == before
-
-
 def test_parquet_schema_evolution_merge(spark, sf_dir, tmp_path):
     """Batches written before and after a column was added must read as
     ONE table with mergeSchema: old rows surface NULL for the new
