@@ -1,9 +1,12 @@
 """Vector column functions over ``array<float>`` embedding columns.
 
 Pure Column expressions (``F.aggregate`` / ``F.zip_with`` run JVM-side):
-no Python in the hot path, so a 100 TB embedding sweep stays inside
-whole-stage codegen. Summation order is the array order on both Spark and
-DuckDB, which keeps dot products bit-comparable for the oracle gate.
+no Python in the hot path of a 100 TB embedding sweep. The higher-order
+folds (``ArrayAggregate``, ``ZipWith``, ``ArrayTransform``) are
+``CodegenFallback`` on Spark 4.1, so whole-stage codegen interprets them
+rather than compiling them; an unrolled 64-term dot measured no faster at
+sf0.01. Summation order is the array order on both Spark and DuckDB,
+which keeps dot products bit-comparable for the oracle gate.
 """
 
 from __future__ import annotations
@@ -76,7 +79,7 @@ def jl_project(a: Column, out_dim: int, seed: int = 17) -> list[Column]:
     """Johnson-Lindenstrauss random projection with a Rademacher (+-1)
     sign matrix derived from a multiplicative hash of (input index,
     output index) — no materialized projection matrix, so the operator
-    ships as pure codegen expressions and the oracle can replay the
+    ships as pure JVM expressions and the oracle can replay the
     exact signs in SQL. Achlioptas (2003) shows +-1 entries satisfy the
     JL lemma; scaling by 1/sqrt(out_dim) preserves expected norms.
 

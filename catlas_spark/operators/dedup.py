@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..caching import materialize_and_release, maybe_persist, release
 from ..functions.text import char_shingles, fingerprint, token_shingles
+from ..sources.local import local_frame
 
 
 def _hex_long(col: Column, start: int, length: int = 13) -> Column:
@@ -506,9 +507,10 @@ def connected_components(
         sess_parts = spark.sparkContext.defaultParallelism
     # Under lazy_plans (explain/plan-sweep tooling) the driver regime is
     # SKIPPED (r8 review, the graph.py regime-dispatch discipline): its
-    # createDataFrame result is a LocalRelation that hides the whole
-    # upstream pair pipeline from every plan assertion, and the probe
-    # collect is a pointless action in an explain-only context. The
+    # result is a ``local_frame`` LocalRelation (the labels as literal
+    # rows) that hides the whole upstream pair pipeline from every plan
+    # assertion, and the probe collect is a pointless action in an
+    # explain-only context. The
     # distributed min-label loop below is the representative plan; its
     # pins persist (visible subtrees) per the r7 lazy_plans design.
     from ..caching import is_materializing
@@ -558,9 +560,10 @@ def connected_components(
         ntype = edges.schema["s"].dataType
         from pyspark.sql import types as T
 
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(n, comp_min[_find(n)]) for n in parent],
-            schema=T.StructType(
+            T.StructType(
                 [
                     T.StructField("node", ntype),
                     T.StructField("cluster_id", ntype),

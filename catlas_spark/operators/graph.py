@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
+
 
 def pagerank(
     nodes: DataFrame,
@@ -276,7 +278,8 @@ def triangle_participation(
         # lazily, exactly the pre-dispatch behavior. Otherwise the probe
         # and count would each re-execute the un-persisted corpus-sized
         # edge build, and the sf0.1 driver regime would hand the plan
-        # sweep a vacuous LocalRelation (the r7 pin tautology, again).
+        # sweep a vacuous ``local_frame`` LocalRelation of the counts (the
+        # r7 pin tautology, again).
         return _degree_plan()
 
     # single bounded probe action: limit(k+1) returns the WHOLE edge list
@@ -307,9 +310,10 @@ def triangle_participation(
             from pyspark.sql import types as T
 
             ntype = canon.schema["u"].dataType
-            return edges.sparkSession.createDataFrame(
+            return local_frame(
+                edges.sparkSession,
                 list(counts.items()),
-                schema=T.StructType(
+                T.StructType(
                     [
                         T.StructField("node", ntype),
                         T.StructField("n_triangles", T.LongType()),

@@ -14,6 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..sources.local import local_frame
 
 # Bounded-collect driver regime threshold (the connected_components /
 # triangle_participation discipline): when the VOCABULARY fits under
@@ -133,8 +136,8 @@ def _collect_vocab_if_small(
     and at most cap+1 rows when it does not. Returns None when the
     driver regime must not run: vocabulary too large, cap 0 (forced
     distributed), or an explain-only context (lazy_plans — the
-    createDataFrame result would hide the whole distributed loop from
-    plan assertions, and the probe is a pointless action there)."""
+    ``local_frame`` LocalRelation would hide the whole distributed loop
+    from plan assertions, and the probe is a pointless action there)."""
     from ..caching import is_materializing
 
     cap = DRIVER_MAX_VOCAB if driver_max_vocab is None else driver_max_vocab
@@ -184,9 +187,12 @@ def bpe_train(
             n_merges,
             apply_last=False,
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
-        "step INT, left_sym STRING, right_sym STRING, merged STRING, pair_count BIGINT",
+        T.StructType.fromDDL(
+            "step INT, left_sym STRING, right_sym STRING, merged STRING, pair_count BIGINT"
+        ),
     )
 
 
@@ -211,22 +217,14 @@ def bpe_segment_words(
     if vocab is not None:
         _, seg_py = _learn_merges_py(vocab, n_merges, apply_last=True)
         cnts = dict(vocab)
-        from pyspark.sql import types as T
-
-        return word_counts.sparkSession.createDataFrame(
+        return local_frame(
+            word_counts.sparkSession,
             [
                 (w, cnts[w], i + 1, sym)
                 for w, syms in seg_py.items()
                 for i, sym in enumerate(syms)
             ],
-            schema=T.StructType(
-                [
-                    T.StructField("word", T.StringType()),
-                    T.StructField("cnt", T.LongType()),
-                    T.StructField("pos", T.IntegerType()),
-                    T.StructField("sym", T.StringType()),
-                ]
-            ),
+            T.StructType.fromDDL("word STRING, cnt BIGINT, pos INT, sym STRING"),
         )
     _, seg = _learn_merges(
         _char_segmentation(word_counts, word_col, count_col),

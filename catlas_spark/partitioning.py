@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sources.local import local_frame
+
 SALT_COL = "__salt"
 
 
@@ -152,13 +154,13 @@ def plan_size_bytes(df: DataFrame) -> int:
     a huge sentinel on failure so callers dispatch to the scale-safe
     regime.
 
-    CAVEAT: LocalRelation / in-memory DataFrames (createDataFrame,
-    spark.range) report Long.MaxValue here (verified on this box), so
-    ``form='auto'`` dispatchers (minhash_signatures'
-    MINHASH_INROW_MIN_BYTES, the quantile direct-regime threshold)
-    always choose the scale-safe slower regime for non-file sources —
-    value-correct, but callers with small in-memory inputs should force
-    the form explicitly to keep the fast path."""
+    CAVEAT: frames over a Python RDD (``createDataFrame`` of a list or
+    an RDD) report Long.MaxValue here, so ``form='auto'`` dispatchers
+    (minhash_signatures' MINHASH_INROW_MIN_BYTES, the quantile
+    direct-regime threshold) always choose the scale-safe slower regime
+    for them — value-correct, but callers with such inputs should force
+    the form explicitly to keep the fast path. A ``local_frame``
+    LocalRelation and ``spark.range`` report their real size."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
@@ -411,9 +413,10 @@ def grouped_exact_quantiles(
         off = offsets[(r["__pid"], r[group_col])]
         if any(off < t <= off + r["__c"] for t in ranks[r[group_col]]):
             hit_rows.append((int(r["__pid"]), r[group_col], int(off)))
-    hits = spark.createDataFrame(
+    hits = local_frame(
+        spark,
         hit_rows,
-        schema=T.StructType(
+        T.StructType(
             [
                 T.StructField("__hpid", T.IntegerType()),
                 T.StructField("__hgrp", gtype),
@@ -458,7 +461,7 @@ def grouped_exact_quantiles(
             else []
         )
     )
-    tdf = spark.createDataFrame(targets, schema=tschema)
+    tdf = local_frame(spark, targets, tschema)
 
     w = Window.partitionBy("__pid", group_col).orderBy(value_col)
     cum = g.withColumn(

@@ -17,14 +17,16 @@ Spark-first choices:
   Catalyst sees cardinalities. The miller-index cap is a parameter of
   the source, not a post-filter (R1 pushdown, reference
   catlas/prediction_steps.py:227-231).
-- Inference is an Arrow-batched mapInPandas with an executor-singleton
-  model (P5, reference BOCPP_dict catlas/adslab_predictions.py:22,260-272)
-  and micro-batching (P6, :287-292). Rows already soft-deleted skip the
-  model and emit NULL energies (F20, :275-282). The model is reached
-  through the module-level ``_model``: cloudpickle pickles that by
-  reference, so every task in a worker process shares one cache. (A
-  closure that read the cache dict directly would carry a pickled copy
-  of it, one fresh cache and one model load per task.)
+- Inference is a mapInArrow with an executor-singleton model (P5,
+  reference BOCPP_dict catlas/adslab_predictions.py:22,260-272) and
+  micro-batching (P6, :287-292). It reads three Arrow arrays and appends
+  the energy column to each batch, so the carried columns (structures,
+  maps, arrays) never round-trip through pandas. Rows already
+  soft-deleted skip the model and emit NULL energies (F20, :275-282).
+  The model is reached through the module-level ``_model``: cloudpickle
+  pickles that by reference, so every task in a worker process shares
+  one cache. (A closure that read the cache dict directly would carry a
+  pickled copy of it, one fresh cache and one model load per task.)
 - Per-row energy arrays stay ARRAY columns; grouped min/argmin is
   array_min + array_position (A3, :324-337) — no explode/shuffle.
 
@@ -43,7 +45,8 @@ from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -194,24 +197,35 @@ def _model(checkpoint: str) -> _SurrogateModel:
 
 
 def _scorer(step_label: str, checkpoint: str, batch_size: int):
-    """The mapInPandas function of one inference step: NULL energies for
-    soft-deleted rows (F20), ``batch_size`` micro-batches (P6)."""
+    """The mapInArrow function of one inference step: NULL energies for
+    soft-deleted rows (F20), ``batch_size`` micro-batches (P6).
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    It reads three Arrow arrays (``__seed``, ``filter_reason`` and the
+    lengths of ``config_ids``) and appends the energies to the incoming
+    batch, so the carried columns pass through as Arrow buffers, never
+    converted to Python or pandas."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         model = _model(checkpoint)
-        for pdf in batches:
-            energies: list = [None] * len(pdf)
-            live = pdf.index[pdf["filter_reason"].isna()]
-            for start in range(0, len(live), batch_size):  # micro-batching (P6)
-                idx = live[start : start + batch_size]
-                seeds = pdf.loc[idx, "__seed"].to_numpy(dtype=np.int64).view(np.uint64)
-                counts = pdf.loc[idx, "config_ids"].apply(len).to_numpy(dtype=np.int64)
-                preds = model.predict(seeds, counts)
-                for i, p in zip(idx, preds):
-                    energies[i] = np.round(p, 6)
-            out = pdf.copy()
-            out[step_label] = energies
-            yield out
+        for batch in batches:
+            live = batch.column("filter_reason").is_null().to_numpy(zero_copy_only=False)
+            counts = np.where(
+                live,
+                pc.list_value_length(batch.column("config_ids")).fill_null(0).to_numpy(),
+                0,
+            )
+            idx = np.flatnonzero(live)
+            seeds = batch.column("__seed").to_numpy().view(np.uint64)[idx]
+            values = [np.empty(0, np.float64)]
+            for start in range(0, len(idx), batch_size):  # micro-batching (P6)
+                part = slice(start, start + batch_size)
+                values.extend(model.predict(seeds[part], counts[idx[part]]))
+            energies = pa.ListArray.from_arrays(
+                pa.array(np.concatenate([[0], np.cumsum(counts)]), pa.int32()),
+                pa.array(np.round(np.concatenate(values), 6), pa.float64()),
+                mask=pa.array(~live),
+            )
+            yield batch.append_column(step_label, energies)
 
     return run
 

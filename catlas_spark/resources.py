@@ -6,7 +6,7 @@ priority=10000000`` so only GPU workers run them
 the graph optimizer (P2). Spark's native equivalent is **stage-level
 scheduling**: a ``ResourceProfile`` attached to the inference stage, so
 on a heterogeneous cluster (GPU executor group + CPU executor group, the
-reference's hybrid k8s layout) the expensive mapInPandas stage lands on
+reference's hybrid k8s layout) the expensive mapInArrow stage lands on
 GPU executors only.
 
 Stage-level scheduling needs dynamic allocation on YARN/k8s/standalone;
@@ -44,8 +44,8 @@ def inference_profile(spark: SparkSession, gpus_per_task: int = 1, cpus_per_task
 
 
 def map_with_profile(df: DataFrame, map_fn, schema, profile=None) -> DataFrame:
-    """mapInPandas with an optional ResourceProfile pinning the stage to
-    GPU executors (profile=None → plain mapInPandas, CPU path)."""
+    """mapInArrow with an optional ResourceProfile pinning the stage to
+    GPU executors (profile=None → plain mapInArrow, CPU path)."""
     if profile is None:
-        return df.mapInPandas(map_fn, schema)
-    return df.mapInPandas(map_fn, schema, profile=profile)
+        return df.mapInArrow(map_fn, schema)
+    return df.mapInArrow(map_fn, schema, profile=profile)

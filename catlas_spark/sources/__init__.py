@@ -1,1 +1,2 @@
-"""Scans: the star schema table names and the screen fixture generators."""
+"""Scans: the star schema table names, the screen fixture generators and
+driver-side rows as local relations."""

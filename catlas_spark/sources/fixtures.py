@@ -19,6 +19,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
+from .local import local_frame
 
 ELEMENT_POOL = [
     "Pt", "Cu", "Ag", "Au", "Pd", "Zn", "Ni", "Fe", "Co", "Rh",
@@ -48,7 +49,7 @@ def make_bulks(spark: SparkSession, n: int = 200, seed: int = 42) -> DataFrame:
                 pickle.dumps({"id": bulk_id}),
             )
         )
-    return spark.createDataFrame(rows, schemas.BULKS)
+    return local_frame(spark, rows, schemas.BULKS)
 
 
 def make_adsorbates(spark: SparkSession, seed: int = 42) -> DataFrame:
@@ -57,7 +58,7 @@ def make_adsorbates(spark: SparkSession, seed: int = 42) -> DataFrame:
     for s in ADSORBATE_SMILES:
         bond = [0] if rng.random() < 0.6 else [0, 1]
         rows.append((s, pickle.dumps({"smiles": s}), bond, "synthetic_adsorbates"))
-    return spark.createDataFrame(rows, schemas.ADSORBATES)
+    return local_frame(spark, rows, schemas.ADSORBATES)
 
 
 def make_pourbaix(spark: SparkSession, bulk_ids: list[str], seed: int = 42) -> DataFrame:
@@ -72,7 +73,7 @@ def make_pourbaix(spark: SparkSession, bulk_ids: list[str], seed: int = 42) -> D
                 ph, v = ph10 / 10.0, v10 / 10.0
                 decomp = offsets[b] + 0.05 * abs(ph - 7.0) + 0.3 * abs(v)
                 rows.append((b, ph, v, round(decomp, 6)))
-    return spark.createDataFrame(rows, schemas.POURBAIX)
+    return local_frame(spark, rows, schemas.POURBAIX)
 
 
 def make_validation(spark: SparkSession, n: int = 2000, seed: int = 42) -> DataFrame:
@@ -101,4 +102,4 @@ def make_validation(spark: SparkSession, n: int = 2000, seed: int = 42) -> DataF
                 rng.random() > 0.1,
             )
         )
-    return spark.createDataFrame(rows, schemas.VALIDATION)
+    return local_frame(spark, rows, schemas.VALIDATION)

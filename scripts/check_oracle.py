@@ -12,12 +12,14 @@ Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from catlas_spark import queries as Q  # noqa: E402
 from catlas_spark.session import get_spark  # noqa: E402

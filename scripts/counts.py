@@ -13,9 +13,11 @@ from __future__ import annotations
 
 import re
 import subprocess
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def real_counts() -> dict[str, int]:
@@ -27,7 +29,7 @@ def real_counts() -> dict[str, int]:
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     m = re.search(r"(\d+) tests collected", out.stdout)
     n_tests = int(m.group(1)) if m else -1
@@ -63,7 +65,7 @@ _PATCHES = [
 
 def patch(counts: dict[str, int]) -> None:
     for fname in {f for f, _, _ in _PATCHES}:
-        path = f"/root/repo/{fname}"
+        path = os.path.join(REPO, fname)
         with open(path) as fh:
             text = fh.read()
         for f, pat, repl in _PATCHES:

@@ -2,16 +2,18 @@
 plan-shape claims (pushdown, broadcast, TakeOrdered, partial aggs, no
 Python stages) are inspectable without running anything.
 
-Usage: python scripts/dump_plans.py   (writes /root/repo/PLANS.md)
+Usage: python scripts/dump_plans.py   (writes PLANS.md at the checkout root)
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from catlas_spark import queries as Q
 from catlas_spark.session import get_spark
@@ -72,7 +74,7 @@ def main() -> None:
         # keep the tree part (before the numbered-operator detail section)
         tree = plan.split("\n\n")[0]
         out += [f"## {name}", "", f"*{why}*", "", "```", tree.strip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     import sys
     print("wrote PLANS.md", file=sys.stderr)

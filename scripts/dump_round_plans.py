@@ -8,7 +8,7 @@ Usage:
 e.g. run at HEAD:
     python scripts/dump_round_plans.py plans/r11 after dedup_containment ...
 and in a worktree checked out at the previous round's commit:
-    python scripts/dump_round_plans.py /root/repo/plans/r11 before ...
+    python scripts/dump_round_plans.py plans/r11 before ...
 
 Unlike dump_plans.py (PLANS.md excerpts, tree only), this keeps the
 numbered-operator detail section so PushedFilters / ReadSchema / join

@@ -37,7 +37,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb
@@ -169,8 +170,8 @@ REGIMES: dict[str, dict[str, tuple[str, str, dict]]] = {
         # bounded-collect driver merge loop (vocab fits) vs the
         # distributed window/groupBy loop — the connected_components
         # dispatch pattern; no plan mark needed (deterministic kwarg
-        # comparison, and both regimes' returns reach the query as a
-        # LocalRelation / createDataFrame anyway)
+        # comparison, and both regimes return the learned merge table as
+        # the same ``local_frame`` LocalRelation anyway)
         "bpe-driver": (
             "catlas_spark.operators.tokenize",
             "bpe_train",
@@ -231,9 +232,9 @@ REGIMES: dict[str, dict[str, tuple[str, str, dict]]] = {
 # CC/triangle regimes need no mark: their dispatch is a deterministic
 # comparison against the forced kwarg itself (edge count vs 0 / BIG),
 # covered by the signature-drift test plus the operators' forced-regime
-# unit tests — and no plan token can see them anyway (both the driver
-# createDataFrame result and the checkpointed distributed loop collapse
-# to a LogicalRDD in the returned plan).
+# unit tests. (Only the distributed loop's checkpoint collapses to a
+# LogicalRDD in the returned plan; the driver regime returns a
+# ``local_frame`` LocalRelation, a LocalTableScan with no upstream.)
 PLAN_MARKS: dict[tuple[str, str], tuple[str, bool]] = {
     # the in-row signature fold is the only array_min in this plan; the
     # explode form aggregates with min()+collect_set instead

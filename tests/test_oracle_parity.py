@@ -6,12 +6,8 @@ running at sf0.001 keeps the suite fast while exercising identical code.
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from catlas_spark import queries as Q
 from catlas_spark.sources.star import STAR_TABLES

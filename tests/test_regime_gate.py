@@ -6,10 +6,11 @@ regime, full oracle compare) and prove the gate can FAIL."""
 
 import importlib
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 
 import regime_gate  # noqa: E402
 

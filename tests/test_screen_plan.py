@@ -9,7 +9,7 @@ import json
 import os
 
 import cloudpickle
-import pandas as pd
+import pyarrow as pa
 from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
@@ -79,7 +79,7 @@ def test_run_screen_build_py4j_commands(spark, monkeypatch):
 
 
 def test_inference_model_is_a_worker_singleton(monkeypatch):
-    """Every task unpickles the mapInPandas function anew; both copies
+    """Every task unpickles the mapInArrow function anew; both copies
     must reach the one per-process model, not a model of their own."""
     seen = []
     predict = pipeline._SurrogateModel.predict
@@ -91,12 +91,19 @@ def test_inference_model_is_a_worker_singleton(monkeypatch):
     monkeypatch.setattr(pipeline._SurrogateModel, "predict", spy)
     monkeypatch.setattr(pipeline, "_MODEL_CACHE", {})
     blob = cloudpickle.dumps(pipeline._scorer("dE", "singleton-test", 64))
-    batch = pd.DataFrame(
-        {"__seed": [11, 12], "config_ids": [[0, 1], [0]], "filter_reason": [None, None]}
+    batch = pa.RecordBatch.from_pydict(
+        {"__seed": [11, 12], "config_ids": [[0, 1], [0]], "filter_reason": [None, None]},
+        schema=pa.schema(
+            [
+                ("__seed", pa.int64()),
+                ("config_ids", pa.list_(pa.int32())),
+                ("filter_reason", pa.string()),
+            ]
+        ),
     )
     for _ in range(2):
         out = list(cloudpickle.loads(blob)(iter([batch])))
-        assert [len(e) for e in out[0]["dE"]] == [2, 1]
+        assert [len(e) for e in out[0].column("dE").to_pylist()] == [2, 1]
     assert len(seen) == 2
     assert seen[0] is seen[1]
 

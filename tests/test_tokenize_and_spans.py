@@ -4,10 +4,6 @@ corpus-level oracle sweep in test_oracle_parity."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from catlas_spark.operators.tokenize import bpe_segment_words, bpe_train
 from catlas_spark.queries import q_dup_span_coverage
 
