@@ -6,20 +6,35 @@ The reference counts rows after every filter with eager `len(df)` calls
 ``Observation``s attached to the running plan — they piggyback on the
 single real action (zero extra jobs/scans), which is the only viable
 form at 100 TB.
+
+A counter is filled when the first action over the screen result
+succeeds: a ``collect()``, ``toPandas()`` or ``count()`` fills all of
+them before it returns, a write through the listener bus tens of
+milliseconds after. ``Lineage.summary`` waits at most ``SUMMARY_WAIT_S``
+for them and then names the stages still unfilled (no action ran, or it
+failed) instead of blocking forever.
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+# how long ``Lineage.summary`` waits for counters an action is still filling
+SUMMARY_WAIT_S = 2.0
 
 
 @dataclass
 class StageCount:
     name: str
     observation: Observation
+
+    @property
+    def filled(self) -> bool:
+        return self.observation._jo.future().isCompleted()
 
     @property
     def counts(self) -> dict:
@@ -31,7 +46,20 @@ class Lineage:
     stages: list[StageCount] = field(default_factory=list)
 
     def summary(self) -> list[dict]:
-        """One dict per stage: rows and live rows (soft-delete aware)."""
+        """One dict per stage: rows and live rows (soft-delete aware).
+
+        Raises ``RuntimeError`` naming the unfilled stages when the
+        counters are not all filled within ``SUMMARY_WAIT_S``."""
+        deadline = time.monotonic() + SUMMARY_WAIT_S
+        unfilled = [s for s in self.stages if not s.filled]
+        while unfilled and time.monotonic() < deadline:
+            time.sleep(0.01)
+            unfilled = [s for s in unfilled if not s.filled]
+        if unfilled:
+            raise RuntimeError(
+                "lineage counters not filled (no action ran over the screen "
+                f"result, or it failed): {[s.name for s in unfilled]}"
+            )
         out = []
         for s in self.stages:
             got = dict(s.counts)

@@ -9,7 +9,8 @@ Reference parity:
   'infinite' (`catlas/nuclearity.py:86-105`). The reference uses
   graph_tool on a pymatgen structure; here the graph arrives as explicit
   edge arrays (the surrogate-structure policy, SURVEY §7.3) and the
-  labeling runs once per Arrow batch (``mapInArrow``): every (row,
+  labeling runs once per Arrow batch (inside the screen's next
+  ``mapInArrow``, see ``pipeline.ArrowFeature``): every (row,
   element, 1x / 2x2 replica) induced subgraph is a disjoint block of one
   batch-wide graph, labeled by min-label hooking plus pointer jumping in
   numpy, with component sizes from ``np.unique``. No per-row Python and
@@ -24,8 +25,6 @@ one py4j call per column instead of one per expression node.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -204,28 +203,10 @@ def nuclearity_batch(elements: pa.Array, edges: pa.Array) -> pa.MapArray:
     )
 
 
-def add_nuclearity(
-    df: DataFrame,
-    elements_col: str = "atom_elements",
-    edges_col: str = "bond_edges",
-    out_col: str = "nuclearity_info",
-) -> DataFrame:
-    """Arrow-batched nuclearity feature: one ``nuclearity_batch`` call per
-    Arrow batch; the other columns pass through as Arrow, untouched.
-
-    ``edges_col`` is array<array<int>> (pairs); ``elements_col`` is
-    array<string>. Output is the reference's MAP shape.
-    """
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, NUCLEARITY_SCHEMA, True)]
-    )
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            info = nuclearity_batch(batch.column(elements_col), batch.column(edges_col))
-            yield batch.append_column(out_col, info)
-
-    return df.mapInArrow(run, out_schema)
+def nuclearity_column(batch: pa.RecordBatch) -> pa.MapArray:
+    """The nuclearity feature of one Arrow batch, from its ``atom_elements``
+    (array<string>) and ``bond_edges`` (array<array<int>> pairs)."""
+    return nuclearity_batch(batch.column("atom_elements"), batch.column("bond_edges"))
 
 
 def attach_surrogate_graph(slabs: DataFrame, n_nodes_mod: int = 12) -> DataFrame:

@@ -29,6 +29,13 @@ Spark-first choices:
   pickled copy of it, one fresh cache and one model load per task.)
 - Per-row energy arrays stay ARRAY columns; grouped min/argmin is
   array_min + array_position (A3, :324-337) — no explode/shuffle.
+- Every Python evaluation costs each op a fixed per-task floor, so an
+  Arrow feature column no native operator reads (``ArrowFeature``: the
+  T4 nuclearity map) gets no mapInArrow of its own. ``run_screen``
+  carries it to the next inference step's mapInArrow, which inserts it
+  before scoring; only before a memoized step, or when no inference step
+  follows, does it run in a mapInArrow of its own (``add_features``).
+  The example config runs two Python evaluations per op.
 
 Build shape: ``run_screen`` is lazy, so its cost is plan construction
 over py4j. Each stage adds its columns in one SQL-text projection
@@ -36,13 +43,14 @@ over py4j. Each stage adds its columns in one SQL-text projection
 one ``withColumn`` per column, and higher-order functions are written as
 SQL lambdas, never Python lambdas (each of those creates its lambda
 variables over py4j). tests/test_screen_plan.py holds the build to a
-py4j command budget and the result to a recorded fingerprint.
+py4j command budget, the executed plan to its node counts (two
+MapInArrow) and the result to recorded fingerprints.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+from collections.abc import Callable, Iterator, Sequence
+from typing import Any, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -63,6 +71,12 @@ from .operators.filters import (
     apply_filters,
 )
 from .operators.relational import soft_delete_gate
+from .operators.structure import (
+    NUCLEARITY_SCHEMA,
+    anomaly_flags,
+    attach_surrogate_graph,
+    nuclearity_column,
+)
 
 
 # F20 gating of struct-valued features lives in
@@ -150,6 +164,56 @@ def enumerate_adslabs(surfaces: DataFrame, adsorbates: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Arrow feature columns, computed inside the next Arrow step's mapInArrow
+# ---------------------------------------------------------------------------
+
+
+class ArrowFeature(NamedTuple):
+    """A feature column that ``compute`` derives from one Arrow batch on
+    its own, inserted right after the column ``after``."""
+
+    field: T.StructField
+    after: str
+    compute: Callable[[pa.RecordBatch], pa.Array]
+
+
+# T4 nuclearity feature map (reference prediction_steps.py:232-247)
+NUCLEARITY = ArrowFeature(
+    T.StructField("nuclearity_info", NUCLEARITY_SCHEMA, True), "bond_edges", nuclearity_column
+)
+
+
+def _feature_schema(schema: T.StructType, features: Sequence[ArrowFeature]) -> T.StructType:
+    fields = list(schema.fields)
+    for f in features:
+        fields.insert([x.name for x in fields].index(f.after) + 1, f.field)
+    return T.StructType(fields)
+
+
+def _add_feature_columns(
+    batch: pa.RecordBatch, features: Sequence[ArrowFeature]
+) -> pa.RecordBatch:
+    for f in features:
+        at = batch.schema.get_field_index(f.after) + 1
+        batch = batch.add_column(at, f.field.name, f.compute(batch))
+    return batch
+
+
+def add_features(df: DataFrame, features: Sequence[ArrowFeature]) -> DataFrame:
+    """``df`` with the ``features`` columns, computed by one mapInArrow
+    (none when there are no features). The other columns pass through as
+    Arrow buffers."""
+    if not features:
+        return df
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield _add_feature_columns(batch, features)
+
+    return df.mapInArrow(run, _feature_schema(df.schema, features))
+
+
+# ---------------------------------------------------------------------------
 # Batched inference (deterministic surrogate of energy_prediction,
 # catlas/adslab_predictions.py:217-362)
 # ---------------------------------------------------------------------------
@@ -196,9 +260,13 @@ def _model(checkpoint: str) -> _SurrogateModel:
     return model
 
 
-def _scorer(step_label: str, checkpoint: str, batch_size: int):
-    """The mapInArrow function of one inference step: NULL energies for
-    soft-deleted rows (F20), ``batch_size`` micro-batches (P6).
+def _scorer(
+    features: Sequence[ArrowFeature], step_label: str, checkpoint: str, batch_size: int
+):
+    """The mapInArrow function of one inference step: it first inserts
+    the pending ``features`` (on every row, live or soft-deleted), then
+    scores: NULL energies for soft-deleted rows (F20), ``batch_size``
+    micro-batches (P6).
 
     It reads three Arrow arrays (``__seed``, ``filter_reason`` and the
     lengths of ``config_ids``) and appends the energies to the incoming
@@ -208,6 +276,7 @@ def _scorer(step_label: str, checkpoint: str, batch_size: int):
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         model = _model(checkpoint)
         for batch in batches:
+            batch = _add_feature_columns(batch, features)
             live = batch.column("filter_reason").is_null().to_numpy(zero_copy_only=False)
             counts = np.where(
                 live,
@@ -236,9 +305,11 @@ def energy_prediction(
     checkpoint: str = "surrogate-v1",
     batch_size: int = 64,
     gpu: bool = False,
+    features: Sequence[ArrowFeature] = (),
 ) -> DataFrame:
     """Add ``<label>`` (array<double>), ``min_<label>`` and
-    ``argmin_config_<label>`` columns via Arrow-batched inference.
+    ``argmin_config_<label>`` columns via Arrow-batched inference, after
+    the ``features`` columns, which the same mapInArrow computes.
 
     - Soft-deleted rows (filter_reason set) skip the model and get NULL
       result columns (F20).
@@ -258,7 +329,7 @@ def energy_prediction(
     with_seed = df.withColumns(added)
 
     out_schema = T.StructType(
-        list(with_seed.schema.fields)
+        list(_feature_schema(with_seed.schema, features).fields)
         + [T.StructField(step_label, T.ArrayType(T.DoubleType()), True)]
     )
 
@@ -267,7 +338,7 @@ def energy_prediction(
     from .resources import inference_profile, map_with_profile
 
     profile = inference_profile(df.sparkSession) if gpu else None
-    run = _scorer(step_label, checkpoint, batch_size)
+    run = _scorer(features, step_label, checkpoint, batch_size)
     scored = map_with_profile(with_seed, run, out_schema, profile).drop("__seed")
     energies = sqltext.ident(step_label)
     min_e = f"array_min({energies})"
@@ -372,11 +443,12 @@ def run_screen(
         if k != "filter_by_max_miller_index"  # pushed into the source (R1)
     }
     slabs = apply_filters(slabs, slab_conf, SLAB_FILTERS, ctx, None)
+    # Arrow features no native operator reads, waiting for the next
+    # Arrow step's mapInArrow
+    features: list[ArrowFeature] = []
     if config.get("enumerate_nuclearity"):
-        # T4 feature map on surfaces (reference prediction_steps.py:232-247)
-        from .operators.structure import add_nuclearity, attach_surrogate_graph
-
-        slabs = add_nuclearity(attach_surrogate_graph(slabs))
+        slabs = attach_surrogate_graph(slabs)
+        features.append(NUCLEARITY)
     slabs = attach_counter(slabs, "surfaces", lin)
 
     adslabs = enumerate_adslabs(slabs, a)
@@ -386,7 +458,10 @@ def run_screen(
         kind = step["step"]
         if kind == "inference":
             if step.get("memo_table"):
-                adslabs = memoized_energy_prediction(spark, adslabs, step)
+                # memo hits and soft-deleted rows skip the step's compute
+                adslabs = memoized_energy_prediction(
+                    spark, add_features(adslabs, features), step
+                )
             else:
                 adslabs = energy_prediction(
                     adslabs,
@@ -394,14 +469,14 @@ def run_screen(
                     checkpoint=step.get("checkpoint", "surrogate-v1"),
                     batch_size=int(step.get("batch_size", 64)),
                     gpu=bool(step.get("gpu", False)),
+                    features=features,
                 )
+            features = []
             if step.get("anomaly_detection"):
                 # T5: relaxation steps flag dissociation/desorption/
                 # reconstruction by comparing initial vs relaxed
                 # connectivity (flag_systems.py:40-96). Surrogate final
                 # edges = initial minus hash-selected bonds.
-                from .operators.structure import anomaly_flags, attach_surrogate_graph
-
                 if "bond_edges" not in adslabs.columns:
                     adslabs = attach_surrogate_graph(adslabs)
                 final_edges = (
@@ -438,4 +513,4 @@ def run_screen(
         else:
             raise ValueError(f"unknown step kind {kind!r}")
 
-    return attach_counter(adslabs, "results", lin)
+    return attach_counter(add_features(adslabs, features), "results", lin)

@@ -1,15 +1,18 @@
 """Guards on the screen's plan: its result (schema and rows) is pinned by a
-fingerprint, its build cost by a py4j command budget, and the inference
-model by its executor-singleton contract (P5)."""
+fingerprint, its physical shape by a node count, its build cost by a
+py4j command budget, and the inference model by its executor-singleton
+contract (P5)."""
 
 from __future__ import annotations
 
 import hashlib
 import json
 import os
+import threading
 
 import cloudpickle
 import pyarrow as pa
+import pytest
 from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
@@ -27,16 +30,37 @@ GOLDEN = os.path.join(REPO, "tests", "screen_fingerprint.json")
 # built per expression node in Python costs several commands per node;
 # a per-column withColumn chain or a Python-lambda higher-order function
 # pushes the build back over this budget.
-BUILD_COMMAND_BUDGET = 1300
+BUILD_COMMAND_BUDGET = 800
 
 
-def _screen(spark, monkeypatch):
-    """run_screen over the example config and a fixed fixture bulk set."""
+# Config shapes the example does not cover, each pinned by its own
+# fingerprint: (example config, memo table path) -> config.
+SHAPES = {
+    # nuclearity with no inference step after it
+    "nuclearity_without_steps": lambda c, memo: {**c, "adslab_prediction_steps": []},
+    # nuclearity followed by a memoized inference step
+    "nuclearity_then_memo": lambda c, memo: {
+        **c,
+        "adslab_prediction_steps": [
+            {**c["adslab_prediction_steps"][0], "memo_table": memo},
+            *c["adslab_prediction_steps"][1:],
+        ],
+    },
+    # the example's steps without nuclearity
+    "without_nuclearity": lambda c, memo: {**c, "enumerate_nuclearity": False},
+}
+
+
+def _screen(spark, monkeypatch, shape=None, memo=None):
+    """run_screen over the example config (reshaped by ``SHAPES[shape]``)
+    and a fixed fixture bulk set."""
     monkeypatch.delenv("SCREEN_MAX_MILLER", raising=False)
     config = load_config(os.path.join(REPO, "configs", "example_screen.yml"))
+    if shape is not None:
+        config = SHAPES[shape](config, memo)
     bulks = fixtures.make_bulks(spark, 60, seed=7)
     adsorbates = fixtures.make_adsorbates(spark)
-    return lambda: run_screen(spark, config, bulks, adsorbates, {}, Lineage())
+    return lambda lineage=None: run_screen(spark, config, bulks, adsorbates, {}, lineage)
 
 
 def fingerprint(df) -> dict:
@@ -58,6 +82,51 @@ def test_screen_fingerprint_unchanged(spark, monkeypatch):
     assert got["schema"] == golden["schema"]
     assert got["rows"] == golden["rows"]
     assert got["rows_sha256"] == golden["rows_sha256"]
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_screen_shape_fingerprint_unchanged(spark, monkeypatch, tmp_path, shape):
+    with open(GOLDEN) as f:
+        golden = json.load(f)["shapes"][shape]
+    got = fingerprint(_screen(spark, monkeypatch, shape, str(tmp_path / "memo"))())
+    assert got == golden
+
+
+def test_screen_plan_shape(spark, monkeypatch):
+    """Two Python evaluations per op: nuclearity runs inside the first
+    inference step's mapInArrow, and the F18 window (two hash exchanges)
+    and the adsorbate broadcast stay as they are."""
+    df = _screen(spark, monkeypatch)()
+    out = df.drop(*binary_columns(df))
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan only, not the initial one too
+    text = plan.toString()
+    assert text.count("MapInArrow") == 2
+    assert text.count("Exchange hashpartitioning") == 2
+    assert text.count("BroadcastExchange") == 1
+
+
+def test_lineage_summary_raises_when_no_action_ran(spark, monkeypatch):
+    """A screen whose action never ran has no counts: ``summary()`` names
+    the unfilled stages instead of waiting for them forever."""
+    lineage = Lineage()
+    _screen(spark, monkeypatch)(lineage)
+    raised: list[BaseException] = []
+
+    def call():
+        try:
+            lineage.summary()
+        except Exception as e:  # noqa: BLE001 - the test inspects it
+            raised.append(e)
+
+    worker = threading.Thread(target=call, daemon=True)
+    worker.start()
+    worker.join(timeout=5)
+    assert not worker.is_alive(), "summary() still waiting after 5 s"
+    assert len(raised) == 1 and isinstance(raised[0], RuntimeError)
+    assert "bulks_in" in str(raised[0]) and "results" in str(raised[0])
 
 
 def test_run_screen_build_py4j_commands(spark, monkeypatch):
@@ -90,7 +159,7 @@ def test_inference_model_is_a_worker_singleton(monkeypatch):
 
     monkeypatch.setattr(pipeline._SurrogateModel, "predict", spy)
     monkeypatch.setattr(pipeline, "_MODEL_CACHE", {})
-    blob = cloudpickle.dumps(pipeline._scorer("dE", "singleton-test", 64))
+    blob = cloudpickle.dumps(pipeline._scorer((), "dE", "singleton-test", 64))
     batch = pa.RecordBatch.from_pydict(
         {"__seed": [11, 12], "config_ids": [[0, 1], [0]], "filter_reason": [None, None]},
         schema=pa.schema(

@@ -16,12 +16,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from catlas_spark.operators.structure import (
-    add_nuclearity,
     anomaly_flags,
     attach_surrogate_graph,
     nuclearity_batch,
 )
-from catlas_spark.pipeline import enumerate_slabs
+from catlas_spark.pipeline import NUCLEARITY, add_features, enumerate_slabs
 from catlas_spark.sources import fixtures
 
 
@@ -222,7 +221,7 @@ def test_nuclearity_batch_edge_cases():
 def test_add_nuclearity_distributed_matches_local(spark):
     bulks = fixtures.make_bulks(spark, n=6)
     slabs = attach_surrogate_graph(enumerate_slabs(bulks, max_miller=1))
-    out = add_nuclearity(slabs).select(
+    out = add_features(slabs, [NUCLEARITY]).select(
         "atom_elements", "bond_edges", "nuclearity_info"
     ).collect()
     assert len(out) > 0
