@@ -125,9 +125,11 @@ def lazy_plans():
     their full lazy plans (for explain/inspection tooling only).
 
     Frames pinned during the context (see :func:`pin`) are persisted
-    instead of checkpointed and are unpersisted HERE on exit, so plan
-    tooling neither hides pinned subtrees behind Scan ExistingRDD nor
-    leaks canonicalized-plan CacheManager entries into later queries."""
+    instead of checkpointed and are released (:func:`release`) HERE on
+    exit, so plan tooling neither hides pinned subtrees behind Scan
+    ExistingRDD nor leaks canonicalized-plan CacheManager entries into
+    later queries, and a pin that shares a live holder's entry leaves
+    it cached."""
     global _MATERIALIZE
     prev = _MATERIALIZE
     _MATERIALIZE = False
@@ -139,7 +141,7 @@ def lazy_plans():
             while _LAZY_PINS:
                 df = _LAZY_PINS.pop()
                 try:
-                    df.unpersist(False)
+                    release(df)
                 except Exception:
                     pass
 

@@ -87,19 +87,15 @@ class Lineage:
         return {"nodes": nodes, "links": links}
 
 
-def attach_counter(df: DataFrame, stage: str, lineage: Lineage | list) -> DataFrame:
+def attach_counter(df: DataFrame, stage: str, lineage: Lineage) -> DataFrame:
     """Attach an Observation counting rows (and live rows when a
     ``filter_reason`` column exists) at this point of the plan."""
-    obs = Observation(f"stage_{stage}_{len(getattr(lineage, 'stages', lineage))}")
+    obs = Observation(f"stage_{stage}_{len(lineage.stages)}")
     metrics = [F.expr("count(1) AS rows")]
     if "filter_reason" in df.columns:
         metrics.append(
             F.expr("sum(CASE WHEN filter_reason IS NULL THEN 1 ELSE 0 END) AS live_rows")
         )
     out = df.observe(obs, *metrics)
-    sc = StageCount(stage, obs)
-    if isinstance(lineage, Lineage):
-        lineage.stages.append(sc)
-    else:
-        lineage.append(sc)
+    lineage.stages.append(StageCount(stage, obs))
     return out

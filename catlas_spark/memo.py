@@ -18,35 +18,21 @@ Key design points mapped from the reference:
 - R11 idempotence → appends are deduplicated on read (max one row per
   key kept), so task retries / concurrent runs cannot poison results.
 
-At scale the memo table is just another partitioned parquet dataset: the
-hit-join is a shuffle (or broadcast when small) and compaction is a
-normal parquet rewrite.
-
-Sharded layout (``n_shards``): the reference shards its sqlite memo by
-key hash (`catlas/cache_utils.py:189-190`); the Spark-native conclusion
-is hive-partitioning the memo by a key-derived shard column. An
-incremental run touching few keys then PRUNES the memo scan to the
-shard directories its keys can live in — the hit-join reads a strict
-subset of the table's files (asserted in tests via ``inputFiles``), so
-lookup cost scales with the INPUT's shard footprint, not the memo's
-total size. The shard set is collected from the input keys (a
-map-side-combinable distinct of at most ``n_shards`` values) and
-applied as a static partition filter.
+At scale the memo table is just another parquet dataset: the hit-join
+is a shuffle (or broadcast when small). The reference's sqlite sharding
+(`catlas/cache_utils.py:189-190`) has no counterpart: the table has one
+flat layout.
 """
 
 from __future__ import annotations
 
 import os
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 KEY_COL = "__memo_key"
-# no underscore prefix: this becomes a hive PATH segment (memo_shard=K/),
-# and Spark's file listing treats leading-underscore paths as hidden
-SHARD_COL = "memo_shard"
 
 
 # Internal key-DERIVATION schema tag, hashed into every key alongside the
@@ -54,8 +40,7 @@ SHARD_COL = "memo_shard"
 # changes (k2 = the round-6 null-indicator interleave): the tag makes the
 # invalidation EXPLICIT — without it, a derivation change silently turns
 # every pre-existing memo table into all-miss, full-recompute, and leaves
-# permanently dead old-key rows that compact() (which dedups per key, and
-# cannot recompute keys from stored outputs) will never reclaim.
+# permanently dead old-key rows.
 # Deployments upgrading across a KEY_SCHEMA bump should DROP (or rebuild)
 # their memo tables; the old rows are unreachable storage, not a
 # correctness hazard.
@@ -115,74 +100,27 @@ def _check_schema_marker(path: str) -> None:
 
 
 def _memo_files(path: str) -> list[str]:
-    """Pinned snapshot of the memo table: the explicit list of part files
-    currently on disk (recursive — sharded tables keep their files under
-    ``memo_shard=K/`` hive directories). Reading from this list (not
-    the directory) freezes the scan — a later append to the same
-    directory is invisible to any lazy plan built over this snapshot.
-    This is the local-FS analog of a table-format snapshot id
-    (Delta/Iceberg) on a real cluster."""
+    """Pinned snapshot of the memo table: the explicit list of top-level
+    part files currently on disk. Reading from this list (not the
+    directory) freezes the scan — a later append to the same directory
+    is invisible to any lazy plan built over this snapshot. This is the
+    local-FS analog of a table-format snapshot id (Delta/Iceberg) on a
+    real cluster. Files in subdirectories (a table an earlier build
+    wrote hive-sharded) are not listed: such a table reads as all-miss,
+    the same dead storage a KEY_SCHEMA bump leaves."""
     if not os.path.isdir(path):
         return []
-    out = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
-        out.extend(
-            os.path.join(root, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    return sorted(out)
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
 
 
-def _split_layout(files: list[str]) -> tuple[list[str], list[str]]:
-    """Partition a memo file list into (flat, sharded) groups by whether
-    the path carries a ``memo_shard=K/`` hive segment."""
-    sharded = [f for f in files if re.search(rf"{SHARD_COL}=\d+/", f)]
-    ss = set(sharded)
-    return [f for f in files if f not in ss], sharded
-
-
-def _guard_layout(files: list[str], n_shards: int | None) -> None:
-    """Refuse layout/shard-setting mismatches LOUDLY (r8 review): Spark's
-    partition discovery over a mixed flat+sharded file list silently
-    DROPS the flat files' rows (confirmed: 3 of 6 rows returned), so the
-    old "flat files carry every shard: always read them" branch never
-    worked — a table toggled between n_shards settings lost its
-    pre-toggle entries to silent recompute, and compact() on the mix
-    permanently deleted them. The docstring contract (n_shards stable
-    per table) is now enforced, with compact(n_shards=...) as the
-    migration path."""
-    flat, sharded = _split_layout(files)
-    if flat and sharded:
-        raise ValueError(
-            "memo table mixes flat and memo_shard=K/ parquet files — a mixed "
-            "read silently drops the flat rows. Repair with "
-            "compact(spark, table_path, n_shards=N) (re-shards every row) or "
-            "compact(spark, table_path, n_shards=None) (flattens)."
-        )
-    if flat and n_shards:
-        raise ValueError(
-            "memo table was written flat but n_shards is set — the setting "
-            "must be stable per table (appending sharded files next to flat "
-            "ones makes the flat rows unreadable). Migrate with "
-            f"compact(spark, table_path, n_shards={n_shards}) first."
-        )
-    if sharded and not n_shards:
-        raise ValueError(
-            "memo table is hive-sharded but n_shards is not set — a flat "
-            "append would make the existing sharded rows' table mixed and "
-            "the flat rows unreadable. Pass the table's n_shards, or "
-            "flatten with compact(spark, table_path, n_shards=None)."
-        )
-
-
-def _read_memo(spark: SparkSession, files: list[str], base_path: str) -> DataFrame | None:
+def _read_memo(spark: SparkSession, files: list[str]) -> DataFrame | None:
     if not files:
         return None
-    # basePath recovers hive partition columns (the shard) from dir names
-    # even though the scan is pinned to explicit leaf files
-    memo = spark.read.option("basePath", base_path).parquet(*files)
+    memo = spark.read.parquet(*files)
     # idempotent reads: keep one row per key (appends may duplicate on
     # retry). Winner ordered by source FILE (r8 review): orderBy(KEY_COL)
     # — the partition key itself — was a no-op ordering, so concurrent
@@ -205,7 +143,6 @@ def memoize(
     compute: Callable[[DataFrame], DataFrame],
     table_path: str,
     version: str = "v1",
-    n_shards: int | None = None,
     pin_input: bool = False,
 ) -> DataFrame:
     """Compute-once operator application.
@@ -226,27 +163,13 @@ def memoize(
     classify the just-computed misses as hits-in-memo, and return an
     inconsistent (miss-dropping) result.
 
-    ``n_shards`` hive-partitions the table by ``pmod(key, n_shards)``
-    (the reference's sqlite sharding, `catlas/cache_utils.py:189-190`,
-    as a partition-pruned parquet layout): the PINNED FILE LIST itself
-    is pruned to the shard directories that THIS input's keys can live
-    in (rows of other shards cannot match any input key — the shard is
-    a pure function of the key), so an incremental run reads a strict
-    subset of the memo's files instead of the whole table. This is
-    manifest-level pruning, the same thing a table format's snapshot +
-    partition predicate does; filtering inside the plan instead would
-    not prune the scan here because the idempotency window sits between
-    scan and filter. Pick n_shards so one shard ~ a few hundred MB at
-    steady state; the setting must be stable for a given table.
-
     ``pin_input`` materializes the keyed input once (localCheckpoint /
     reliable checkpoint via ``caching.pin``): the keyed frame is
-    otherwise re-evaluated by the shard-footprint probe, the compute
-    append, and both serving joins — up to 4 executions of ``df``'s
-    lineage. Leave False when df is a plain scan (the common case, and
-    an extra materialization would only add cost); set True when df is
-    itself an expensive derived plan — the very input memoization
-    targets.
+    otherwise re-evaluated by the compute append and both serving
+    joins — up to 3 executions of ``df``'s lineage. Leave False when df
+    is a plain scan (the common case, and an extra materialization would
+    only add cost); set True when df is itself an expensive derived plan
+    — the very input memoization targets.
     """
     _check_schema_marker(table_path)
     keyed = df.withColumn(KEY_COL, memo_key(key_cols, version))
@@ -254,41 +177,14 @@ def memoize(
         from .caching import pin
 
         keyed = pin(keyed)
-    files_before = _memo_files(table_path)
-    _guard_layout(files_before, n_shards)
-    input_shards: set[int] | None = None
-    if n_shards:
-        keyed = keyed.withColumn(SHARD_COL, F.pmod(F.col(KEY_COL), F.lit(n_shards)))
-        # the input's shard footprint: ≤ n_shards values, map-side
-        # combinable. Probed ONLY when there are files to prune (r8
-        # review): on a fresh table the probe is a full execution of
-        # df's lineage spent pruning an empty list — and the post-append
-        # read needs no pruning either, since fresh files land in input
-        # shards by construction (an unpruned read of them is a superset
-        # that the key join filters identically).
-        if files_before:
-            input_shards = {r[0] for r in keyed.select(SHARD_COL).distinct().collect()}
-
-    def _shard_prune(files: list[str]) -> list[str]:
-        if input_shards is None:
-            return files
-        kept = []
-        for f in files:
-            m = re.search(rf"{SHARD_COL}=(\d+)/", f)
-            # layout is guarded sharded-only here; keep matching shards
-            if m is None or int(m.group(1)) in input_shards:
-                kept.append(f)
-        return kept
-
-    memo = _read_memo(spark, _shard_prune(files_before), table_path)
+    memo = _read_memo(spark, _memo_files(table_path))
 
     if memo is None:
         hits = None
         misses = keyed
     else:
-        pruned = memo.drop(SHARD_COL) if SHARD_COL in memo.columns else memo
-        hits = keyed.join(pruned, KEY_COL, "inner")
-        misses = keyed.join(pruned.select(KEY_COL), KEY_COL, "left_anti")
+        hits = keyed.join(memo, KEY_COL, "inner")
+        misses = keyed.join(memo.select(KEY_COL), KEY_COL, "left_anti")
 
     # Write-then-read-back: the append below is the ONLY execution of the
     # compute plan. Misses are then served from the freshly persisted rows,
@@ -297,133 +193,15 @@ def memoize(
     # and the expensive plan never runs a second time at consumption.
     computed = compute(misses)
     result_cols = [c for c in computed.columns if c not in keyed.columns]
-    writer = computed.select(
-        KEY_COL, *([SHARD_COL] if n_shards else []), *result_cols
-    ).write.mode("append")
-    if n_shards:
-        writer = writer.partitionBy(SHARD_COL)
-    writer.parquet(table_path)
-    memo_after = _read_memo(spark, _shard_prune(_memo_files(table_path)), table_path)
+    computed.select(KEY_COL, *result_cols).write.mode("append").parquet(table_path)
+    memo_after = _read_memo(spark, _memo_files(table_path))
     if memo_after is None:
         # a zero-row append writes no part files (empty input — e.g. an
-        # empty micro-batch in the foreachBatch+memoize pattern), and an
-        # empty input's shard footprint prunes every existing file too:
-        # serve the (empty) computed frame directly
+        # empty micro-batch in the foreachBatch+memoize pattern) into a
+        # table that has none yet: serve the (empty) computed frame
         miss_rows = computed.limit(0)
     else:
-        if SHARD_COL in memo_after.columns:
-            memo_after = memo_after.drop(SHARD_COL)
         miss_rows = misses.join(memo_after, KEY_COL, "inner")
     if hits is None:
-        return miss_rows.drop(KEY_COL, SHARD_COL)
-    return hits.drop(KEY_COL, SHARD_COL).unionByName(miss_rows.drop(KEY_COL, SHARD_COL))
-
-
-_PRESERVE = "preserve"
-
-
-def compact(
-    spark: SparkSession, table_path: str, n_shards: int | None | str = _PRESERVE
-) -> int:
-    """Rewrite the memo table with one row per key (reclaims duplicate
-    appends left by task retries / concurrent runs — the maintenance
-    counterpart of the read-side dedup). By default preserves the
-    table's layout; it is also the LAYOUT MIGRATION path (r8 review):
-    pass ``n_shards=N`` to re-shard every row (``pmod(key, N)`` is a
-    pure function of the key, so legacy flat rows shard correctly) or
-    ``n_shards=None`` to flatten. Flat and sharded file groups are read
-    SEPARATELY — one mixed read silently drops the flat rows (the
-    defect that made mixed tables lose data on compact). A mixed table
-    with the default layout raises: the target layout is ambiguous,
-    pass n_shards explicitly. Returns the compacted row count.
-
-    Crash safety (ADVICE r8): the rewrite stages to ``<table>.compact``
-    and then RENAME-SWAPS it into place (live table aside to
-    ``<table>.compact.old``, staged copy in, backup removed), so a
-    complete copy exists on disk at every instant. If a crash leaves no
-    live directory, rename ``<table>.compact`` (deduplicated result) or
-    ``<table>.compact.old`` (pre-compact original) back into place.
-
-    Scope: the swap uses ``os.rename``, so ``table_path`` must be a
-    LOCAL filesystem path (for HDFS/object-store tables, route the swap
-    through the Hadoop FileSystem API), and compact requires exclusive
-    access to the table — a concurrent reader can hit a brief
-    no-live-directory window between the two renames."""
-    files = _memo_files(table_path)
-    flat_files, sharded_files = _split_layout(files)
-    if n_shards == _PRESERVE:
-        if flat_files and sharded_files:
-            raise ValueError(
-                "mixed flat+sharded memo table: pass n_shards=N to re-shard "
-                "or n_shards=None to flatten (the pre-mix setting cannot be "
-                "inferred from the files)"
-            )
-        n_shards = None if flat_files else True  # True = keep existing SHARD_COL
-    parts = []
-    flat_part = _read_memo(spark, flat_files, table_path)
-    if flat_part is not None:
-        parts.append(flat_part)
-    sharded_part = _read_memo(spark, sharded_files, table_path)
-    if sharded_part is not None:
-        # drop the recovered partition column unless we are preserving it
-        if n_shards is not True:
-            sharded_part = sharded_part.drop(SHARD_COL)
-        parts.append(sharded_part)
-    if not parts:
-        return 0
-    if len(parts) == 2:
-        # re-dedup across the two groups (file-name order within the
-        # whole pinned list == flat-vs-sharded union order is ambiguous;
-        # prefer the sharded group's rows, matching what the old mixed
-        # read served)
-        flat_only = parts[0].join(parts[1].select(KEY_COL), KEY_COL, "left_anti")
-        memo = parts[1].unionByName(flat_only, allowMissingColumns=False)
-    else:
-        memo = parts[0]
-    if isinstance(n_shards, int) and not isinstance(n_shards, bool):
-        memo = memo.withColumn(SHARD_COL, F.pmod(F.col(KEY_COL), F.lit(n_shards)))
-    sharded = n_shards is True or (isinstance(n_shards, int) and not isinstance(n_shards, bool))
-    # the overwrite below clears the directory — carry the key-schema
-    # marker across (the compacted rows keep whatever era they were
-    # written under; compact cannot re-derive keys)
-    marker = os.path.join(table_path, _SCHEMA_MARKER)
-    marker_val = None
-    if os.path.isfile(marker):
-        with open(marker) as f:
-            marker_val = f.read().strip()
-    import shutil
-
-    tmp = table_path + ".compact"
-    writer = memo.write.mode("overwrite")
-    if sharded:
-        writer = writer.partitionBy(SHARD_COL)
-    writer.parquet(tmp)
-    # stage the key-schema marker INTO tmp before the swap (review): the
-    # rename then carries it atomically with the data, so no window — and
-    # no recovery path — exists where the live table is silently demoted
-    # to "pre-marker, unclassifiable" (which would permanently disable
-    # the stale-schema warning)
-    if marker_val is not None:
-        with open(os.path.join(tmp, _SCHEMA_MARKER), "w") as f:
-            f.write(marker_val)
-    # swap, don't overwrite in place (ADVICE r8): a final
-    # mode("overwrite") onto table_path clears the live directory before
-    # the new files land, so a crash mid-write loses the table with only
-    # an undocumented tmp copy surviving. The rename swap keeps a
-    # complete copy on disk at every instant: the live table moves aside
-    # to <table>.compact.old, the fully-written <table>.compact becomes
-    # live, then the backup goes. RECOVERY after a crash between the two
-    # renames (no live dir, both copies intact): rename either copy back
-    # to the table path — .compact is the deduplicated result, .old the
-    # pre-compact original. os.rename is LOCAL-FILESYSTEM only (an HDFS
-    # or object-store URI needs the Hadoop FileSystem.rename API
-    # instead), and compact requires EXCLUSIVE access: between the two
-    # renames there is a brief no-live-directory window a concurrent
-    # reader would see as FileNotFound.
-    old = tmp + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(table_path, old)
-    os.rename(tmp, table_path)
-    n = spark.read.parquet(table_path).count()
-    shutil.rmtree(old, ignore_errors=True)
-    return n
+        return miss_rows.drop(KEY_COL)
+    return hits.drop(KEY_COL).unionByName(miss_rows.drop(KEY_COL))

@@ -337,14 +337,9 @@ def apply_filters(
     config: dict[str, Any],
     registry: dict[str, FilterFn],
     context: dict | None = None,
-    lineage: list | None = None,
 ) -> DataFrame:
     """Apply config entries in order (reference semantics:
-    catlas/filters.py:38,135): None/'None' disables; unknown names warn.
-
-    If ``lineage`` is given, an Observation counter is attached after
-    each filter (row accounting without extra actions — K4 analog).
-    """
+    catlas/filters.py:38,135): None/'None' disables; unknown names warn."""
     ctx = context or {}
     out = df
     for name, value in config.items():
@@ -355,8 +350,4 @@ def apply_filters(
             warnings.warn(f"unknown filter {name!r} — skipped (reference semantics)")
             continue
         out = fn(out, value, ctx)
-        if lineage is not None:
-            from ..lineage import attach_counter
-
-            out = attach_counter(out, name, lineage)
     return out

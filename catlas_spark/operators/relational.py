@@ -118,10 +118,10 @@ def group_exists_mark(
     )
 
 
-def soft_delete_gate(df: DataFrame, expensive: Column, reason_col: str = "filter_reason") -> Column:
+def soft_delete_gate(df: DataFrame, expensive: Column) -> Column:
     """Evaluate ``expensive`` only on live rows; NULL on soft-deleted ones
     (reference F20, `catlas/adslab_predictions.py:275-282`)."""
-    return F.when(F.col(reason_col).isNull(), expensive).otherwise(F.lit(None))
+    return F.when(F.col("filter_reason").isNull(), expensive).otherwise(F.lit(None))
 
 
 def grouped_min_argmin(

@@ -209,12 +209,12 @@ def nuclearity_column(batch: pa.RecordBatch) -> pa.MapArray:
     return nuclearity_batch(batch.column("atom_elements"), batch.column("bond_edges"))
 
 
-def attach_surrogate_graph(slabs: DataFrame, n_nodes_mod: int = 12) -> DataFrame:
+def attach_surrogate_graph(slabs: DataFrame) -> DataFrame:
     """Deterministic surrogate structure graph per slab: node elements
     cycle through bulk_elements; edges from a hash chain. Stands in for
     the pymatgen connectivity matrix (SURVEY §7.3 surrogate policy)."""
     key = "bulk_id, slab_millers, slab_shift, slab_top"
-    n_nodes = f"(4 + pmod(xxhash64({key}, 'n'), {int(n_nodes_mod)}))"
+    n_nodes = f"(4 + pmod(xxhash64({key}, 'n'), 12))"
     idx = f"sequence(0, {n_nodes} - 1)"
     # greatest(size, 1): an EMPTY bulk_elements array (dirty upstream
     # row) made pmod(i, 0) an ANSI DIVIDE_BY_ZERO job abort (r8 review);

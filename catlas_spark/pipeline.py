@@ -424,12 +424,10 @@ def run_screen(
     lin = lineage if lineage is not None else Lineage()
 
     b = attach_counter(bulks, "bulks_in", lin)
-    b = apply_filters(b, config.get("bulk_filters", {}), BULK_FILTERS, ctx, None)
+    b = apply_filters(b, config.get("bulk_filters", {}), BULK_FILTERS, ctx)
     b = attach_counter(b, "bulks_filtered", lin)
 
-    a = apply_filters(
-        adsorbates, config.get("adsorbate_filters", {}), ADSORBATE_FILTERS, ctx, None
-    )
+    a = apply_filters(adsorbates, config.get("adsorbate_filters", {}), ADSORBATE_FILTERS, ctx)
 
     # None / "None" disables a filter per the filters-module convention;
     # slab enumeration still needs a bound, so a disabled miller filter
@@ -442,7 +440,7 @@ def run_screen(
         for k, v in config.get("slab_filters", {}).items()
         if k != "filter_by_max_miller_index"  # pushed into the source (R1)
     }
-    slabs = apply_filters(slabs, slab_conf, SLAB_FILTERS, ctx, None)
+    slabs = apply_filters(slabs, slab_conf, SLAB_FILTERS, ctx)
     # Arrow features no native operator reads, waiting for the next
     # Arrow step's mapInArrow
     features: list[ArrowFeature] = []

@@ -28,18 +28,14 @@ def gpu_available(spark: SparkSession) -> bool:
     return spark.conf.get("spark.executor.resource.gpu.amount", None) is not None
 
 
-def inference_profile(spark: SparkSession, gpus_per_task: int = 1, cpus_per_task: int = 1):
+def inference_profile(spark: SparkSession):
     """ResourceProfile for the inference stage, or None when the cluster
     cannot satisfy it (local mode / no GPU executors)."""
     if not gpu_available(spark):
         return None
     from pyspark.resource import ResourceProfileBuilder, TaskResourceRequests
 
-    reqs = (
-        TaskResourceRequests()
-        .cpus(cpus_per_task)
-        .resource("gpu", gpus_per_task)
-    )
+    reqs = TaskResourceRequests().cpus(1).resource("gpu", 1)
     return ResourceProfileBuilder().require(reqs).build
 
 

@@ -23,13 +23,10 @@ def write_results(
     df: DataFrame,
     out_dir: str,
     partition_by: list[str] | None = None,
-    drop_binary: bool = True,
-    mode: str = "overwrite",
 ) -> None:
     """K1/K2 analog: partitioned parquet sink; opaque payloads dropped
     (static-schema version of the reference's runtime type scan)."""
-    out = df.drop(*binary_columns(df)) if drop_binary else df
-    writer = out.write.mode(mode)
+    writer = df.drop(*binary_columns(df)).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(os.path.join(out_dir, "results"))

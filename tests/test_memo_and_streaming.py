@@ -71,53 +71,6 @@ def test_memoize_computes_once_per_miss_batch(spark, tmp_path):
     assert acc.value == 30
 
 
-def test_memo_sharded_layout_prunes_hit_scan(spark, tmp_path):
-    """Sharded memo (reference sqlite sharding cache_utils.py:189-190,
-    as hive partition pruning): an incremental run whose keys land in
-    few shards must read a STRICT SUBSET of the memo's part files — the
-    scan cost follows the input's shard footprint, not the table size."""
-    from catlas_spark.memo import _memo_files, memoize
-
-    table = str(tmp_path / "memo_sharded")
-    big = spark.range(0, 2000).select(F.col("id").alias("x")).repartition(8)
-    out = memoize(spark, big, ["x"], _expensive, table, n_shards=16)
-    assert out.count() == 2000
-    all_files = set(_memo_files(table))
-    assert len(all_files) > 16  # multiple files spread across shard dirs
-    assert any("memo_shard=" in f for f in all_files)
-
-    # incremental run: 3 keys, all hits — pruned scan, no new rows
-    small = spark.createDataFrame([(7,), (8,), (9,)], "x long")
-    res = memoize(spark, small, ["x"], _expensive, table, n_shards=16)
-    got = {(r.x, r.result) for r in res.collect()}
-    assert got == {(7, 70), (8, 80), (9, 90)}
-    read = {
-        f.removeprefix("file://") for f in res.inputFiles() if "memo_sharded" in f
-    }
-    assert read and read < all_files  # strict subset: pruning happened
-    assert set(_memo_files(table)) == all_files  # hits appended nothing
-
-
-def test_memo_sharded_misses_and_compact_preserve_layout(spark, tmp_path):
-    from catlas_spark.memo import SHARD_COL, compact, memoize
-
-    table = str(tmp_path / "memo_sharded2")
-    df1 = spark.range(0, 50).select(F.col("id").alias("x"))
-    memoize(spark, df1, ["x"], _expensive, table, n_shards=4).count()
-    # superset run: 25 new keys computed, hits untouched
-    df2 = spark.range(0, 75).select(F.col("id").alias("x"))
-    out = memoize(spark, df2, ["x"], _expensive, table, n_shards=4)
-    assert {(r.x, r.result) for r in out.collect()} == {(i, i * 10) for i in range(75)}
-    memo = spark.read.parquet(table)
-    assert memo.count() == 75 and SHARD_COL in memo.columns
-    # retry double-append, then compact: layout and values survive
-    memo.write.mode("append").partitionBy(SHARD_COL).parquet(table)
-    assert compact(spark, table) == 75
-    again = memoize(spark, df2, ["x"], _expensive, table, n_shards=4)
-    assert again.count() == 75
-    assert spark.read.parquet(table).count() == 75
-
-
 def test_memoize_results_match_direct(spark, tmp_path):
     table = str(tmp_path / "memo2")
     df = spark.range(0, 40).select((F.col("id") % 7).alias("x"))
@@ -246,9 +199,12 @@ def test_stream_stream_interval_join(spark, sf_dir, events_stream):
 
 
 def test_memo_compact(spark, tmp_path):
+    """Read-side dedup: after a simulated retry double-append the table
+    holds every key twice, and memoize still serves each key once with
+    its value and appends nothing for the all-hit input."""
     from pyspark.sql import functions as F
 
-    from catlas_spark.memo import compact, memoize
+    from catlas_spark.memo import _memo_files, memoize
 
     table = str(tmp_path / "memo3")
     df = spark.range(0, 50).select(F.col("id").alias("x"))
@@ -256,10 +212,10 @@ def test_memo_compact(spark, tmp_path):
     # simulate a retry double-append
     spark.read.parquet(table).write.mode("append").parquet(table)
     assert spark.read.parquet(table).count() == 100
-    assert compact(spark, table) == 50
-    # memo still serves correct results
     out = memoize(spark, df, ["x"], _expensive, table)
-    assert {r.result for r in out.collect()} == {i * 10 for i in range(50)}
+    assert sorted((r.x, r.result) for r in out.collect()) == [(i, i * 10) for i in range(50)]
+    # the miss set was empty: the append added no rows
+    assert spark.read.parquet(*_memo_files(table)).count() == 100
 
 
 def test_incremental_fingerprint_memo(spark, sf_dir, tmp_path):
@@ -609,25 +565,27 @@ def test_memo_key_distinguishes_null_positions(spark):
 
 
 def test_sharded_memoize_tolerates_empty_input(spark, tmp_path):
-    """A zero-row input appends no part files (and its empty shard
-    footprint prunes every existing file), which used to crash the
-    read-back with AttributeError; it must return an empty frame with
-    the computed schema — the empty-micro-batch case of the
+    """A zero-row input appends no rows, which used to crash the
+    read-back with AttributeError on a fresh table; against a fresh
+    table and against an existing one it must return an empty frame
+    with the computed schema — the empty-micro-batch case of the
     foreachBatch+memoize pattern."""
     from pyspark.sql import functions as F
 
     from catlas_spark.memo import memoize
 
+    def compute(m):
+        return m.withColumn("r", F.length("t"))
+
     table = str(tmp_path / "memo_empty")
-    df = spark.createDataFrame([], "x long, t string").filter("1=0")
-    out = memoize(
-        spark,
-        df,
-        ["t"],
-        lambda m: m.withColumn("r", F.length("t")),
-        table,
-        n_shards=4,
-    )
+    empty = spark.createDataFrame([], "x long, t string").filter("1=0")
+    out = memoize(spark, empty, ["t"], compute, table)
+    assert out.count() == 0
+    assert set(out.columns) == {"x", "t", "r"}
+
+    full = spark.createDataFrame([(1, "a"), (2, "bb")], "x long, t string")
+    assert memoize(spark, full, ["t"], compute, table).count() == 2
+    out = memoize(spark, empty, ["t"], compute, table)
     assert out.count() == 0
     assert set(out.columns) == {"x", "t", "r"}
 
@@ -636,23 +594,18 @@ def test_memo_key_schema_marker(spark, tmp_path):
     """The key-schema marker (ADVICE r7): a fresh table records the
     current KEY_SCHEMA; a table marked with an OLDER schema warns loudly
     at lookup time (its rows are unreachable dead storage after an
-    upgrade) instead of silently recomputing forever; compact preserves
-    the marker across its directory rewrite."""
+    upgrade) instead of silently recomputing forever."""
     import os
     import warnings
 
     from pyspark.sql import functions as F
 
-    from catlas_spark.memo import KEY_SCHEMA, _SCHEMA_MARKER, compact, memoize
+    from catlas_spark.memo import KEY_SCHEMA, _SCHEMA_MARKER, memoize
 
     table = str(tmp_path / "memo_marker")
     df = spark.range(0, 10).select(F.col("id").alias("x"))
     memoize(spark, df, ["x"], _expensive, table)
     marker = os.path.join(table, _SCHEMA_MARKER)
-    assert open(marker).read().strip() == KEY_SCHEMA
-
-    # compact rewrites the directory — the marker must survive
-    compact(spark, table)
     assert open(marker).read().strip() == KEY_SCHEMA
 
     # stale-schema table: lookups warn (and still work — all-miss)
@@ -663,55 +616,3 @@ def test_memo_key_schema_marker(spark, tmp_path):
         out = memoize(spark, df, ["x"], _expensive, table)
         assert {r.result for r in out.collect()} == {i * 10 for i in range(10)}
     assert any("key schema" in str(w.message) for w in got)
-
-
-def test_memo_layout_guard_and_migration(spark, tmp_path):
-    """n_shards must be stable per table — ENFORCED (r8 review): Spark's
-    partition discovery over a mixed flat+sharded file list silently
-    drops the flat rows (confirmed 3-of-6), so toggling the setting used
-    to turn all pre-toggle entries into dead storage and compact() on
-    the mix permanently deleted them. Both toggle directions now raise
-    up front, and compact(n_shards=...) is the migration path that reads
-    the layout groups separately (no row loss)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from catlas_spark.memo import compact, memoize
-
-    table = str(tmp_path / "memo_guard")
-    df = spark.range(0, 20).select(F.col("id").alias("x"))
-    memoize(spark, df, ["x"], _expensive, table)  # flat table
-
-    with pytest.raises(ValueError, match="written flat"):
-        memoize(spark, df, ["x"], _expensive, table, n_shards=4)
-
-    # migration: re-shard every row, then the sharded setting serves the
-    # pre-migration entries as HITS (compute must not run again)
-    assert compact(spark, table, n_shards=4) == 20
-
-    def _poison(miss_df):
-        # compute is always CALLED (lazily) — a migrated table shows up
-        # as zero misses, i.e. zero poison rows in the output
-        return miss_df.withColumn("result", F.lit(-1).cast("bigint"))
-
-    out = memoize(spark, df, ["x"], _poison, table, n_shards=4)
-    assert {r.result for r in out.collect()} == {i * 10 for i in range(20)}
-
-    # the reverse toggle also raises...
-    with pytest.raises(ValueError, match="hive-sharded"):
-        memoize(spark, df, ["x"], _expensive, table)
-    # ...and flattening migrates back
-    assert compact(spark, table, n_shards=None) == 20
-    out = memoize(spark, df, ["x"], _poison, table)
-    assert {r.result for r in out.collect()} == {i * 10 for i in range(20)}
-
-    # a mixed table (simulated corruption) raises on preserve-compact
-    spark.range(0, 1).select(
-        F.lit(123456789).alias("__memo_key"),
-        F.lit(0).alias("memo_shard"),
-        F.lit(0.0).alias("result"),
-    ).write.mode("append").partitionBy("memo_shard").parquet(table)
-    with pytest.raises(ValueError, match="mixed"):
-        compact(spark, table)
-    with pytest.raises(ValueError, match="mixes"):
-        memoize(spark, df, ["x"], _expensive, table)

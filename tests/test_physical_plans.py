@@ -383,6 +383,40 @@ def test_releasing_an_intermediate_keeps_a_held_entry(spark):
     assert cm.isEmpty()
 
 
+def test_lazy_plans_exit_keeps_a_held_entry(spark):
+    """A pin under lazy_plans whose plan matches a held
+    materialize_and_release output shares that output's CacheManager
+    entry; the context exit releases the pin, which must leave the
+    held entry cached."""
+    import gc
+
+    from pyspark.sql import functions as F
+
+    from catlas_spark.caching import lazy_plans, materialize_and_release, pin
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+
+    def sums():
+        return (
+            spark.range(0, 10_000)
+            .select((F.col("id") % 11).alias("k"), F.col("id").alias("v"))
+            .groupBy("k")
+            .agg(F.sum("v").alias("s"))
+        )
+
+    x = materialize_and_release(sums())
+    with lazy_plans():
+        pin(sums())
+    gc.collect()
+    assert cm.lookupCachedData(x._jdf).isDefined(), "lazy pin exit released a held entry"
+    assert x.count() == 11
+    assert "InMemoryTableScan" in x._jdf.queryExecution().executedPlan().toString()
+    del x
+    gc.collect()
+    assert cm.isEmpty()
+
+
 @pytest.mark.parametrize("fails_at", ["build", "action"])
 def test_builder_raising_mid_build_leaves_no_cache_or_conf(
     spark, sf_dir, monkeypatch, fails_at

@@ -16,8 +16,6 @@ ALLOWED = {
     "set_containment_join",
     # edge-form reference the adjacency-form PageRank is tested against
     "pagerank",
-    # recovery / layout-migration step that memoize's errors tell users to run
-    "compact",
 }
 
 

@@ -129,6 +129,35 @@ def test_lineage_summary_raises_when_no_action_ran(spark, monkeypatch):
     assert "bulks_in" in str(raised[0]) and "results" in str(raised[0])
 
 
+def test_lineage_summary_after_each_consumption_shape(spark, monkeypatch, tmp_path):
+    """``collect()`` on a projection, ``toPandas()`` and a parquet write
+    each fill every counter: ``summary()`` then returns the same five
+    stage counts after any of them."""
+    build = _screen(spark, monkeypatch)
+    consume = {
+        "collect": lambda df: df.select("bulk_id", "adsorbate_smiles").collect(),
+        "toPandas": lambda df: df.drop(*binary_columns(df)).toPandas(),
+        "write": lambda df: df.drop(*binary_columns(df))
+        .write.mode("overwrite")
+        .parquet(str(tmp_path / "results")),
+    }
+    summaries = {}
+    for shape, action in consume.items():
+        lineage = Lineage()
+        action(build(lineage))
+        summaries[shape] = lineage.summary()
+    counts = summaries["collect"]
+    assert [s["stage"] for s in counts] == [
+        "bulks_in",
+        "bulks_filtered",
+        "surfaces",
+        "adslabs",
+        "results",
+    ]
+    assert all(s["rows"] > 0 for s in counts)
+    assert summaries["toPandas"] == counts and summaries["write"] == counts
+
+
 def test_run_screen_build_py4j_commands(spark, monkeypatch):
     build = _screen(spark, monkeypatch)
     build()  # warm: first-use lookups are not the steady build cost
